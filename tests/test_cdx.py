@@ -103,6 +103,12 @@ def test_row_build_is_map_only_and_sink_adds_one_range_exchange(spark, pages_dir
     assert plan2.count("Exchange") == 1 and "rangepartitioning" in plan2
 
 
+def test_keep_cols_colliding_with_emitted_columns_is_rejected(spark, pages_dir):
+    pages = read_pages(spark, pages_dir)
+    with pytest.raises(ValueError, match=r"\['n_bytes', 'url'\]"):
+        cdx_rows(pages, keep_cols=("url", "warc_ts", "n_bytes"))
+
+
 def test_merge_cdx_incremental(spark, tmp_path_factory):
     """Two per-snapshot indexes merge into one sorted index: union of
     captures, duplicate (key, ts, digest) rows collapsed, spans still

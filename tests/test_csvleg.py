@@ -128,6 +128,16 @@ def test_record_cap_bounds_the_walk():
     assert len(tokenize_csv(blob)) == MAX_RECORDS
 
 
+def test_oversized_field_keeps_records_read_so_far():
+    # a gated CSV whose last field outgrows the stdlib reader's field
+    # limit: the walk stops there instead of raising out of extract()
+    lines = "".join(f"a{i},b,c\n" for i in range(5)).encode()
+    blob = lines + b'x,y,"' + b"z" * 200_000 + b'"'
+    assert is_csv(blob)
+    assert [b.text for b in tokenize_csv(blob)] == [f"a{i} b c" for i in range(5)]
+    assert extract(blob) == extract(blob)
+
+
 # --- fuzz / determinism -------------------------------------------------------
 
 

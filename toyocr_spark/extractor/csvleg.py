@@ -85,20 +85,25 @@ def tokenize_csv(data: bytes) -> list[Block]:
         return []
     blocks: list[Block] = []
     reader = csv.reader(io.StringIO(text), delimiter=delim)
-    for i, row in enumerate(reader):
-        if i >= MAX_RECORDS:
-            break
-        joined = " ".join(" ".join(c.split()) for c in row if c.strip())
-        if not joined:
-            continue
-        blocks.append(
-            Block(
-                text=joined,
-                tag_path=("csv", "tr"),
-                n_chars=len(joined),
-                kind="title" if not blocks and i == 0 else "table",
+    try:
+        for i, row in enumerate(reader):
+            if i >= MAX_RECORDS:
+                break
+            joined = " ".join(" ".join(c.split()) for c in row if c.strip())
+            if not joined:
+                continue
+            blocks.append(
+                Block(
+                    text=joined,
+                    tag_path=("csv", "tr"),
+                    n_chars=len(joined),
+                    kind="title" if not blocks and i == 0 else "table",
+                )
             )
-        )
+    except csv.Error:
+        # a field over the reader's size limit (or another malformed
+        # record) ends the walk: keep the records read so far
+        pass
     for k, b in enumerate(blocks):
         b.ordinal = k
     return blocks

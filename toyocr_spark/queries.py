@@ -84,6 +84,71 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# ---------------------------------------------------------------------------
+# format-leg scaffold: documents -> one synthesized page per doc ->
+# the extraction kernel. Each leg query supplies only its page builder
+# `make_page(doc_id, text) -> (url, blob)`, which imports its fixture
+# builder in its own body so the Spark driver never imports the fixtures.
+
+
+# the two-link nav chrome the HTML-bodied pages carry around their text
+_NAV = (
+    '<nav><ul><li><a href="/a">one link</a></li>'
+    '<li><a href="/b">two link</a></li></ul></nav>'
+)
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the synth kernels are CPU-bound Python (zip/XML/crypto): spread
+    # them over the cores rather than the file's 1-2 input splits
+    return (
+        _t(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
+def _synth_pages(
+    docs: DataFrame, make_page: Callable[[int, str], tuple[str, bytes]]
+) -> DataFrame:
+    """(doc_id, text) -> non-null (url, html) pages, one per doc."""
+    import pyarrow as pa
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType(), False),
+            T.StructField("html", T.BinaryType(), False),
+        ]
+    )
+
+    def batches(it):
+        for b in it:
+            urls, blobs = [], []
+            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                url, blob = make_page(did, text)
+                urls.append(url)
+                blobs.append(blob)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
+                names=["url", "html"],
+            )
+
+    return docs.mapInArrow(batches, schema)
+
+
+def _synth_extract(
+    docs: DataFrame, make_page: Callable[[int, str], tuple[str, bytes]]
+) -> DataFrame:
+    from toyocr_spark.pipeline import extract_pages
+
+    out = extract_pages(_synth_pages(docs, make_page))
+    return out.select(
+        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
+    )
+
+
 
 # ---------------------------------------------------------------------------
 # scan + filter + aggregate (S1, F5, A1/A2 — pushdown-able TPC-H Q1 shape)
@@ -3101,15 +3166,11 @@ def q25_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from toyocr_spark.pipeline import extract_pages
 
     d = _t(spark, sf_dir, "documents")
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
     pages = d.select(
         F.concat(F.lit("https://doc-"), F.col("doc_id").cast("string"), F.lit(".example/p")).alias("url"),
         F.encode(
             F.concat(
-                F.lit(f"<html><body>{nav}<article><p>"),
+                F.lit(f"<html><body>{_NAV}<article><p>"),
                 F.col("text"),
                 F.lit("</p></article></body></html>"),
             ),
@@ -6607,56 +6668,25 @@ def q121_mp4_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extractor/pdf.py decrypt_pdf; fixtures/genpdf.py encrypt_pdf.",
 )
 def q122_pdf_encrypted_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # CPU-bound crypto kernel below: spread over the cores rather
-        # than the file's 1-2 input splits (see q125)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genpdf import encrypt_pdf
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                content = f"BT /F1 12 Tf 50 700 Td ({text}) Tj ET"
-                pdf = (
-                    "%PDF-1.4\n"
-                    "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
-                    "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
-                    "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                    "/Contents 4 0 R >>\nendobj\n"
-                    f"4 0 obj\n<< /Length {len(content)} >>\nstream\n"
-                    f"{content}\nendstream\nendobj\n"
-                    "trailer\n<< /Root 1 0 R >>\n%%EOF\n"
-                ).encode()
-                r = 2 if did % 2 == 0 else 3
-                blobs.append(encrypt_pdf(pdf, r=r, length_bits=40 if r == 2 else 128))
-                urls.append(f"https://encpdf-{did}.example/doc.pdf")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        content = f"BT /F1 12 Tf 50 700 Td ({text}) Tj ET"
+        pdf = (
+            "%PDF-1.4\n"
+            "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+            "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+            "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            "/Contents 4 0 R >>\nendobj\n"
+            f"4 0 obj\n<< /Length {len(content)} >>\nstream\n"
+            f"{content}\nendstream\nendobj\n"
+            "trailer\n<< /Root 1 0 R >>\n%%EOF\n"
+        ).encode()
+        r = 2 if did % 2 == 0 else 3
+        blob = encrypt_pdf(pdf, r=r, length_bits=40 if r == 2 else 128)
+        return f"https://encpdf-{did}.example/doc.pdf", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -6776,12 +6806,6 @@ def q123_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "py encrypt_pdf_aes/encrypt_pdf_aes256.",
 )
 def q125_pdf_aes_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
     base = (
         _t(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 4 == 0)
@@ -6798,48 +6822,28 @@ def q125_pdf_aes_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     r6 = base.where(F.col("doc_id") % 200 == 0).repartition(par)
     rest = base.where(F.col("doc_id") % 200 != 0).repartition(2 * par)
-    d = r6.unionByName(rest)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
 
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genpdf import encrypt_pdf_aes, encrypt_pdf_aes256
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                content = f"BT /F1 12 Tf 50 700 Td ({text}) Tj ET"
-                pdf = (
-                    "%PDF-1.6\n"
-                    "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
-                    "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
-                    "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                    "/Contents 4 0 R >>\nendobj\n"
-                    f"4 0 obj\n<< /Length {len(content)} >>\nstream\n"
-                    f"{content}\nendstream\nendobj\n"
-                    "trailer\n<< /Root 1 0 R >>\n%%EOF\n"
-                ).encode()
-                if did % 200 == 0:  # rare-share PDF 2.0 AESV3 (R6) mix
-                    blobs.append(
-                        encrypt_pdf_aes256(pdf, encrypt_metadata=(did // 200) % 2 == 0)
-                    )
-                else:
-                    blobs.append(encrypt_pdf_aes(pdf, encrypt_metadata=did % 2 == 0))
-                urls.append(f"https://aespdf-{did}.example/doc.pdf")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        content = f"BT /F1 12 Tf 50 700 Td ({text}) Tj ET"
+        pdf = (
+            "%PDF-1.6\n"
+            "1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+            "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+            "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            "/Contents 4 0 R >>\nendobj\n"
+            f"4 0 obj\n<< /Length {len(content)} >>\nstream\n"
+            f"{content}\nendstream\nendobj\n"
+            "trailer\n<< /Root 1 0 R >>\n%%EOF\n"
+        ).encode()
+        if did % 200 == 0:  # rare-share PDF 2.0 AESV3 (R6) mix
+            blob = encrypt_pdf_aes256(pdf, encrypt_metadata=(did // 200) % 2 == 0)
+        else:
+            blob = encrypt_pdf_aes(pdf, encrypt_metadata=did % 2 == 0)
+        return f"https://aespdf-{did}.example/doc.pdf", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(r6.unionByName(rest), make_page)
 
 
 # geometric-Zipf host ladder (closed form, integer-exact both engines):
@@ -7206,57 +7210,22 @@ def q128_pq_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q129_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        # Python zip/XML synth kernel: spread over the cores rather
-        # than the file's 1-2 input splits (the q122/q125 discipline)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gendocx import build_docx, paragraph
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                body = [
-                    paragraph("Navigation | Home | Search | Archive", link="rId9"),
-                    paragraph(
-                        f"Document number {did} overview section", style="Heading2"
-                    ),
-                    paragraph(text),
-                ]
-                blobs.append(
-                    build_docx(
-                        body_xml=body,
-                        header_text=f"draft header {did} do not extract",
-                        footer_text=f"page {did} of 999",
-                    )
-                )
-                urls.append(f"https://docx-{did}.example/doc.docx")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        body = [
+            paragraph("Navigation | Home | Search | Archive", link="rId9"),
+            paragraph(f"Document number {did} overview section", style="Heading2"),
+            paragraph(text),
+        ]
+        blob = build_docx(
+            body_xml=body,
+            header_text=f"draft header {did} do not extract",
+            footer_text=f"page {did} of 999",
+        )
+        return f"https://docx-{did}.example/doc.docx", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7282,52 +7251,21 @@ def q129_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle after.",
 )
 def q130_xlsx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genxlsx import build_xlsx
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_xlsx(
-                        {
-                            "report": [
-                                ["section content and notes for this document"],
-                                [text, did * 7],
-                            ],
-                            "totals": [[did % 9, did % 7], [1, 2]],
-                        }
-                    )
-                )
-                urls.append(f"https://xlsx-{did}.example/sheet.xlsx")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_xlsx(
+            {
+                "report": [
+                    ["section content and notes for this document"],
+                    [text, did * 7],
+                ],
+                "totals": [[did % 9, did % 7], [1, 2]],
+            }
+        )
+        return f"https://xlsx-{did}.example/sheet.xlsx", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7352,55 +7290,24 @@ def q130_xlsx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernels, zero shuffle after.",
 )
 def q131_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genpptx import build_pptx, shape
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_pptx(
-                        slides=[
-                            [
-                                shape(
-                                    [f"Document number {did} briefing deck overview"],
-                                    title=True,
-                                ),
-                                shape([text]),
-                            ]
-                        ],
-                        notes=[f"presenter note {did} never extract"],
-                    )
-                )
-                urls.append(f"https://pptx-{did}.example/deck.pptx")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_pptx(
+            slides=[
+                [
+                    shape(
+                        [f"Document number {did} briefing deck overview"],
+                        title=True,
+                    ),
+                    shape([text]),
+                ]
+            ],
+            notes=[f"presenter note {did} never extract"],
+        )
+        return f"https://pptx-{did}.example/deck.pptx", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7524,51 +7431,16 @@ def q132_ooxml_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repartition then Arrow kernels, zero shuffle after.",
 )
 def q133_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genepub import build_epub, chapter_html
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_epub(
-                        [
-                            chapter_html(
-                                f"Document number {did} book heading", [text]
-                            )
-                        ],
-                        include_nav=True,
-                    )
-                )
-                urls.append(f"https://epub-{did}.example/book.epub")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_epub(
+            [chapter_html(f"Document number {did} book heading", [text])],
+            include_nav=True,
+        )
+        return f"https://epub-{did}.example/book.epub", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7594,57 +7466,24 @@ def q133_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repartition then Arrow kernels, zero shuffle after.",
 )
 def q134_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genrtf import build_rtf, paragraph
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_rtf(
-                        body=[
-                            paragraph(
-                                f"Document number {did} legacy heading", fs=32
-                            ),
-                            paragraph(text),
-                            paragraph(
-                                "Home | Products | Contact",
-                                link=f"https://nav-{did}.example/",
-                            ),
-                        ],
-                        header_text=f"draft header {did} never extract",
-                        footer_text=f"page {did} footer",
-                    )
-                )
-                urls.append(f"https://rtf-{did}.example/doc.rtf")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_rtf(
+            body=[
+                paragraph(f"Document number {did} legacy heading", fs=32),
+                paragraph(text),
+                paragraph(
+                    "Home | Products | Contact",
+                    link=f"https://nav-{did}.example/",
+                ),
+            ],
+            header_text=f"draft header {did} never extract",
+            footer_text=f"page {did} footer",
+        )
+        return f"https://rtf-{did}.example/doc.rtf", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7696,25 +7535,9 @@ def q134_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fraction; no shuffle until a consumer aggregates.",
 )
 def q135_outlink_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
     from toyocr_spark.functions.linkmine import mine_outlinks
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gendocx import build_docx
         from toyocr_spark.fixtures.gendocx import paragraph as dpara
         from toyocr_spark.fixtures.genmd import build_md
@@ -7723,81 +7546,71 @@ def q135_outlink_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         from toyocr_spark.fixtures.genrtf import build_rtf
         from toyocr_spark.fixtures.genrtf import paragraph as rpara
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                fmt = did % 6
-                base = f"https://mix-{did}.example"
-                if fmt == 0:
-                    url = f"{base}/dir/page.html"
-                    blob = (
-                        "<html><body>"
-                        f'<a href="https://out-{did}.example/a">abs</a>'
-                        '<a href="sub/x.html">rel</a>'
-                        '<a href="#top">frag</a>'
-                        f"<p>{text[:80]}</p></body></html>"
-                    ).encode()
-                elif fmt == 1:
-                    url = f"{base}/doc.pdf"
-                    pdf = build_pdf(
-                        [text_stream([paragraph_ops(72, 740, 11, 13, [text[:40]])])],
-                        compress=False,
-                    )
-                    ann = (
-                        b"9 0 obj\n<< /Type /Annot /Subtype /Link /A "
-                        b"<< /S /URI /URI (https://cite-%d.example/paper) >> "
-                        b">>\nendobj\n" % did
-                    )
-                    i = pdf.find(b"xref")
-                    blob = pdf[:i] + ann + pdf[i:]
-                elif fmt == 2:
-                    url = f"{base}/d.docx"
-                    blob = build_docx(
-                        body_xml=[dpara(text[:60], link="rId7")],
-                        links={"rId7": f"https://ref-{did}.example/std"},
-                    )
-                elif fmt == 3:
-                    url = f"{base}/old.rtf"
-                    blob = build_rtf(
-                        body=[
-                            rpara(text[:60]),
-                            rpara("site nav", link=f"https://nav-{did}.example/"),
-                            # intra-document navigation: never edges
-                            "{\\pard {\\field{\\*\\fldinst HYPERLINK \\l "
-                            '"sec1"}{\\fldrslt Section}}\\par}',
-                            '{\\pard {\\field{\\*\\fldinst HYPERLINK "notes.doc"}'
-                            "{\\fldrslt local}}\\par}",
-                        ]
-                    )
-                elif fmt == 4:
-                    url = f"{base}/deck.pptx"
-                    blob = build_pptx(
-                        slides=[[shape([text[:60]])]],
-                        links={"rIdH1": f"https://deck-{did}.example/link"},
-                    )
-                else:
-                    url = f"{base}/README.md"
-                    # mining is pre-scoring, so the nav links ARE edges
-                    # (the HTML-leg contract); the relative link and the
-                    # fenced-code URL must NOT mine
-                    blob = build_md(
-                        f"Readme {did} heading long enough",
-                        [text[:80]],
-                        host=f"md-nav-{did}.example",
-                        links=[("ref", f"https://md-out-{did}.example/r"),
-                               ("rel", "./local.md")],
-                        code=f'fetch("https://code-{did}.example/api")',
-                    )
-                urls.append(url)
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
+        fmt = did % 6
+        base = f"https://mix-{did}.example"
+        if fmt == 0:
+            url = f"{base}/dir/page.html"
+            blob = (
+                "<html><body>"
+                f'<a href="https://out-{did}.example/a">abs</a>'
+                '<a href="sub/x.html">rel</a>'
+                '<a href="#top">frag</a>'
+                f"<p>{text[:80]}</p></body></html>"
+            ).encode()
+        elif fmt == 1:
+            url = f"{base}/doc.pdf"
+            pdf = build_pdf(
+                [text_stream([paragraph_ops(72, 740, 11, 13, [text[:40]])])],
+                compress=False,
             )
+            ann = (
+                b"9 0 obj\n<< /Type /Annot /Subtype /Link /A "
+                b"<< /S /URI /URI (https://cite-%d.example/paper) >> "
+                b">>\nendobj\n" % did
+            )
+            i = pdf.find(b"xref")
+            blob = pdf[:i] + ann + pdf[i:]
+        elif fmt == 2:
+            url = f"{base}/d.docx"
+            blob = build_docx(
+                body_xml=[dpara(text[:60], link="rId7")],
+                links={"rId7": f"https://ref-{did}.example/std"},
+            )
+        elif fmt == 3:
+            url = f"{base}/old.rtf"
+            blob = build_rtf(
+                body=[
+                    rpara(text[:60]),
+                    rpara("site nav", link=f"https://nav-{did}.example/"),
+                    # intra-document navigation: never edges
+                    "{\\pard {\\field{\\*\\fldinst HYPERLINK \\l "
+                    '"sec1"}{\\fldrslt Section}}\\par}',
+                    '{\\pard {\\field{\\*\\fldinst HYPERLINK "notes.doc"}'
+                    "{\\fldrslt local}}\\par}",
+                ]
+            )
+        elif fmt == 4:
+            url = f"{base}/deck.pptx"
+            blob = build_pptx(
+                slides=[[shape([text[:60]])]],
+                links={"rIdH1": f"https://deck-{did}.example/link"},
+            )
+        else:
+            url = f"{base}/README.md"
+            # mining is pre-scoring, so the nav links ARE edges
+            # (the HTML-leg contract); the relative link and the
+            # fenced-code URL must NOT mine
+            blob = build_md(
+                f"Readme {did} heading long enough",
+                [text[:80]],
+                host=f"md-nav-{did}.example",
+                links=[("ref", f"https://md-out-{did}.example/r"),
+                       ("rel", "./local.md")],
+                code=f'fetch("https://code-{did}.example/api")',
+            )
+        return url, blob
 
-    pages = d.mapInArrow(batches, schema)
-    return mine_outlinks(pages)
-
+    return mine_outlinks(_synth_pages(_docs(spark, sf_dir), make_page))
 
 @_q(
     "q136_gzip_extract",
@@ -7819,53 +7632,19 @@ def q135_outlink_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded per row.",
 )
 def q136_gzip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import gzip
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<article><p>{text}"
-                    "</p></article></body></html>"
-                ).encode()
-                blob = gzip.compress(page, 9, mtime=0)
-                if did % 2:
-                    blob = gzip.compress(blob, 9, mtime=0)
-                urls.append(f"https://gz-{did}.example/page.html.gz")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<article><p>{text}"
+            "</p></article></body></html>"
+        ).encode()
+        blob = gzip.compress(page, 9, mtime=0)
+        if did % 2:
+            blob = gzip.compress(blob, 9, mtime=0)
+        return f"https://gz-{did}.example/page.html.gz", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7894,58 +7673,27 @@ def q136_gzip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q137_doc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gendoc import build_doc, para
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_doc(
-                        [
-                            para(
-                                "Navigation | Home | Search | Archive",
-                                link=f"https://nav-{did}.example/",
-                            ),
-                            para(
-                                f"Legacy archive record {did} summary",
-                                style="Heading2",
-                            ),
-                            para(text),
-                        ],
-                        header_text=f"draft header {did} do not extract",
-                        footer_text=f"page {did} of 999",
-                    )
-                )
-                urls.append(f"https://doc-{did}.example/legacy.doc")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_doc(
+            [
+                para(
+                    "Navigation | Home | Search | Archive",
+                    link=f"https://nav-{did}.example/",
+                ),
+                para(
+                    f"Legacy archive record {did} summary",
+                    style="Heading2",
+                ),
+                para(text),
+            ],
+            header_text=f"draft header {did} do not extract",
+            footer_text=f"page {did} of 999",
+        )
+        return f"https://doc-{did}.example/legacy.doc", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -7970,56 +7718,21 @@ def q137_doc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nodes — same map-only kernel, stdlib MIME decode per row.",
 )
 def q138_mhtml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmht import build_mht
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<article><p>{text}"
-                    "</p></article></body></html>"
-                )
-                blobs.append(
-                    build_mht(
-                        page,
-                        encoding="quoted-printable" if did % 2 == 0 else "base64",
-                        location=f"https://mht-{did}.example/page.html",
-                    )
-                )
-                urls.append(f"https://mht-{did}.example/saved.mht")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<article><p>{text}"
+            "</p></article></body></html>"
+        )
+        blob = build_mht(
+            page,
+            encoding="quoted-printable" if did % 2 == 0 else "base64",
+            location=f"https://mht-{did}.example/page.html",
+        )
+        return f"https://mht-{did}.example/saved.mht", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8048,60 +7761,29 @@ def q138_mhtml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q139_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genodt import build_odt, note, paragraph
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                body = [
-                    paragraph(
-                        "Navigation | Home | Search | Archive",
-                        link=f"https://nav-{did}.example/",
-                    ),
-                    paragraph(f"Operations memo {did} heading", heading=2),
-                    "<text:p>"
-                    + text[: len(text) // 2].replace("&", "&amp;").replace("<", "&lt;")
-                    + note(f"hidden footnote {did} must not extract")
-                    + text[len(text) // 2 :].replace("&", "&amp;").replace("<", "&lt;")
-                    + "</text:p>",
-                ]
-                blobs.append(
-                    build_odt(
-                        body_xml=body,
-                        header_text=f"draft header {did} do not extract",
-                        footer_text=f"page {did} of 999",
-                    )
-                )
-                urls.append(f"https://odt-{did}.example/doc.odt")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        body = [
+            paragraph(
+                "Navigation | Home | Search | Archive",
+                link=f"https://nav-{did}.example/",
+            ),
+            paragraph(f"Operations memo {did} heading", heading=2),
+            "<text:p>"
+            + text[: len(text) // 2].replace("&", "&amp;").replace("<", "&lt;")
+            + note(f"hidden footnote {did} must not extract")
+            + text[len(text) // 2 :].replace("&", "&amp;").replace("<", "&lt;")
+            + "</text:p>",
+        ]
+        blob = build_odt(
+            body_xml=body,
+            header_text=f"draft header {did} do not extract",
+            footer_text=f"page {did} of 999",
+        )
+        return f"https://odt-{did}.example/doc.odt", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8129,49 +7811,20 @@ def q139_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernels, zero shuffle after.",
 )
 def q140_xls_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genxls import build_xls
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                sheets = {
-                    "report": [
-                        [f"Legacy workbook {did} header row"],
-                        [text, did * 3],
-                    ],
-                    "chrome": [[1, 2], [3, 4]],
-                }
-                blobs.append(build_xls(sheets, continue_split=bool(did % 2)))
-                urls.append(f"https://xls-{did}.example/wb.xls")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        sheets = {
+            "report": [
+                [f"Legacy workbook {did} header row"],
+                [text, did * 3],
+            ],
+            "chrome": [[1, 2], [3, 4]],
+        }
+        blob = build_xls(sheets, continue_split=bool(did % 2))
+        return f"https://xls-{did}.example/wb.xls", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8199,53 +7852,22 @@ def q140_xls_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q141_ppt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genppt import build_ppt
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_ppt(
-                        slides=[
-                            {
-                                "title": f"Briefing deck {did} title slide",
-                                "body": [text],
-                            }
-                        ],
-                        notes=[f"presenter notes {did} never extract"],
-                        master_text=f"master chrome {did} never extract",
-                    )
-                )
-                urls.append(f"https://ppt-{did}.example/deck.ppt")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_ppt(
+            slides=[
+                {
+                    "title": f"Briefing deck {did} title slide",
+                    "body": [text],
+                }
+            ],
+            notes=[f"presenter notes {did} never extract"],
+            master_text=f"master chrome {did} never extract",
+        )
+        return f"https://ppt-{did}.example/deck.ppt", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8273,56 +7895,27 @@ def q141_ppt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q142_ods_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genods import build_ods, covered
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                sheets = {
-                    "ledger": [
-                        [f"Quarterly ledger {did} header row"],
-                        [
-                            {
-                                "text": text,
-                                "annotation": f"hidden note {did} must not extract",
-                            },
-                            {"text": str(did * 7), "repeat": 2},
-                            covered(),
-                        ],
-                    ],
-                    "chrome": [[7, 8], [9, 10]],
-                }
-                blobs.append(build_ods(sheets, header_rows=1 if did % 2 else 0))
-                urls.append(f"https://ods-{did}.example/book.ods")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        sheets = {
+            "ledger": [
+                [f"Quarterly ledger {did} header row"],
+                [
+                    {
+                        "text": text,
+                        "annotation": f"hidden note {did} must not extract",
+                    },
+                    {"text": str(did * 7), "repeat": 2},
+                    covered(),
+                ],
+            ],
+            "chrome": [[7, 8], [9, 10]],
+        }
+        blob = build_ods(sheets, header_rows=1 if did % 2 else 0)
+        return f"https://ods-{did}.example/book.ods", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8350,53 +7943,22 @@ def q142_ods_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q143_odp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genodp import build_odp
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_odp(
-                        slides=[
-                            {
-                                "title": f"Planning deck {did} title slide",
-                                "body": [text],
-                                "notes": f"presenter notes {did} never extract",
-                            }
-                        ],
-                        master_text=f"master chrome {did} never extract",
-                    )
-                )
-                urls.append(f"https://odp-{did}.example/deck.odp")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_odp(
+            slides=[
+                {
+                    "title": f"Planning deck {did} title slide",
+                    "body": [text],
+                    "notes": f"presenter notes {did} never extract",
+                }
+            ],
+            master_text=f"master chrome {did} never extract",
+        )
+        return f"https://odp-{did}.example/deck.odp", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8420,59 +7982,25 @@ def q143_odp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape: zero plan nodes added — same map-only kernel.",
 )
 def q144_bz2_xz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import bz2
         import gzip
         import lzma
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<article><p>{text}"
-                    "</p></article></body></html>"
-                ).encode()
-                k = did % 3
-                if k == 0:
-                    blob = bz2.compress(page, 9)
-                elif k == 1:
-                    blob = lzma.compress(page, format=lzma.FORMAT_XZ)
-                else:
-                    blob = gzip.compress(bz2.compress(page, 9), 9, mtime=0)
-                urls.append(f"https://env-{did}.example/page.html")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<article><p>{text}"
+            "</p></article></body></html>"
+        ).encode()
+        k = did % 3
+        if k == 0:
+            blob = bz2.compress(page, 9)
+        elif k == 1:
+            blob = lzma.compress(page, format=lzma.FORMAT_XZ)
+        else:
+            blob = gzip.compress(bz2.compress(page, 9), 9, mtime=0)
+        return f"https://env-{did}.example/page.html", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -8498,58 +8026,24 @@ def q144_bz2_xz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape: zero plan nodes added — same map-only kernel.",
 )
 def q145_deflate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import gzip
         import zlib
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<article><p>{text}"
-                    "</p></article></body></html>"
-                ).encode()
-                k = did % 3
-                if k == 0:
-                    blob = zlib.compress(page, 9)
-                elif k == 1:
-                    blob = zlib.compress(zlib.compress(page, 9), 9)
-                else:
-                    blob = gzip.compress(zlib.compress(page, 9), 9, mtime=0)
-                urls.append(f"https://dfl-{did}.example/page.html")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<article><p>{text}"
+            "</p></article></body></html>"
+        ).encode()
+        k = did % 3
+        if k == 0:
+            blob = zlib.compress(page, 9)
+        elif k == 1:
+            blob = zlib.compress(zlib.compress(page, 9), 9)
+        else:
+            blob = gzip.compress(zlib.compress(page, 9), 9, mtime=0)
+        return f"https://dfl-{did}.example/page.html", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9030,52 +8524,21 @@ def q151_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernels, zero shuffle after.",
 )
 def q152_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmd import build_md
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                words = text.split(" ")
-                mid = len(words) // 2
-                words[mid] = f"**{words[mid]}**"
-                blobs.append(
-                    build_md(
-                        f"Operations memo {did} heading",
-                        [" ".join(words)],
-                        front_matter=f"title: planted front-matter decoy {did}",
-                        host=f"nav-{did}.example",
-                    )
-                )
-                urls.append(f"https://md-{did}.example/README.md")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        words = text.split(" ")
+        mid = len(words) // 2
+        words[mid] = f"**{words[mid]}**"
+        blob = build_md(
+            f"Operations memo {did} heading",
+            [" ".join(words)],
+            front_matter=f"title: planted front-matter decoy {did}",
+            host=f"nav-{did}.example",
+        )
+        return f"https://md-{did}.example/README.md", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9106,70 +8569,35 @@ def q152_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q153_tar_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import gzip
-
         from toyocr_spark.fixtures.genmd import build_md
         from toyocr_spark.fixtures.gentar import build_tar
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<h1>Archive doc {did} heading</h1>"
-                    f"<p>{text}</p></body></html>"
-                ).encode()
-                md = build_md(
-                    f"Readme {did} heading long enough",
-                    [f"Readme body paragraph for document {did} inside the archive"],
-                )
-                png = b"\x89PNG\r\n\x1a\n" + bytes(range(256))
-                blob = build_tar(
-                    [
-                        ("page.html", page),
-                        ("README.md.gz", gzip.compress(md, 9, mtime=0)),
-                        ("res/logo.png", png),
-                        ("inner.tar", build_tar([("x.txt", b"nested never recurses " * 3)])),
-                    ],
-                    with_dir=True,
-                    with_symlink=True,
-                )
-                if did % 2:
-                    blob = gzip.compress(blob, 9, mtime=0)
-                urls.append(f"https://tar-{did}.example/bundle.tar")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<h1>Archive doc {did} heading</h1>"
+            f"<p>{text}</p></body></html>"
+        ).encode()
+        md = build_md(
+            f"Readme {did} heading long enough",
+            [f"Readme body paragraph for document {did} inside the archive"],
+        )
+        png = b"\x89PNG\r\n\x1a\n" + bytes(range(256))
+        blob = build_tar(
+            [
+                ("page.html", page),
+                ("README.md.gz", gzip.compress(md, 9, mtime=0)),
+                ("res/logo.png", png),
+                ("inner.tar", build_tar([("x.txt", b"nested never recurses " * 3)])),
+            ],
+            with_dir=True,
+            with_symlink=True,
+        )
+        if did % 2:
+            blob = gzip.compress(blob, 9, mtime=0)
+        return f"https://tar-{did}.example/bundle.tar", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9498,53 +8926,23 @@ def q157_registrable_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sanctioned Arrow kernels, zero shuffle after.",
 )
 def q158_csv_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gencsv import build_csv
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                # a field containing a literal double-quote: the csv
-                # writer quotes the cell and doubles the quote, the
-                # reader must undo both (a naive split leaves '""' in
-                # the text) — and unlike a quoted delimiter this trap
-                # is count-neutral, so the structural sniff still sees
-                # a constant tab count per line
-                payload = text + ' he said "ok"'
-                blob = build_csv(
-                    ["record title column", "payload column"],
-                    [[f"entry {did}", payload], ["1", "2"]],
-                )
-                urls.append(f"https://csv-{did}.example/data.tsv")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        # a field containing a literal double-quote: the csv
+        # writer quotes the cell and doubles the quote, the
+        # reader must undo both (a naive split leaves '""' in
+        # the text) — and unlike a quoted delimiter this trap
+        # is count-neutral, so the structural sniff still sees
+        # a constant tab count per line
+        payload = text + ' he said "ok"'
+        blob = build_csv(
+            ["record title column", "payload column"],
+            [[f"entry {did}", payload], ["1", "2"]],
+        )
+        return f"https://csv-{did}.example/data.tsv", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9575,53 +8973,22 @@ def q158_csv_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernels, zero shuffle after.",
 )
 def q159_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genlatex import build_latex
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                words = text.split(" ")
-                mid = len(words) // 2
-                words[mid] = f"\\textbf{{{words[mid]}}}"
-                blobs.append(
-                    build_latex(
-                        f"Technical note {did} heading",
-                        [" ".join(words)],
-                        comment=f"planted comment decoy {did}",
-                        author=f"Planted Author Decoy {did}",
-                        host=f"nav-{did}.example",
-                    )
-                )
-                urls.append(f"https://arxiv-{did}.example/main.tex")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        words = text.split(" ")
+        mid = len(words) // 2
+        words[mid] = f"\\textbf{{{words[mid]}}}"
+        blob = build_latex(
+            f"Technical note {did} heading",
+            [" ".join(words)],
+            comment=f"planted comment decoy {did}",
+            author=f"Planted Author Decoy {did}",
+            host=f"nav-{did}.example",
+        )
+        return f"https://arxiv-{did}.example/main.tex", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9654,50 +9021,19 @@ def q159_latex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synth + extract in sanctioned Arrow kernels, zero shuffle after.",
 )
 def q160_ipynb_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genipynb import build_ipynb
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_ipynb(
-                        f"Notebook {did} analysis",
-                        [text],
-                        code=f"ans = {did} * 2\nprint(ans)",
-                        output=f"planted stream output row {did}",
-                        host=f"nav-{did}.example",
-                    )
-                )
-                urls.append(f"https://nb-{did}.example/analysis.ipynb")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_ipynb(
+            f"Notebook {did} analysis",
+            [text],
+            code=f"ans = {did} * 2\nprint(ans)",
+            output=f"planted stream output row {did}",
+            host=f"nav-{did}.example",
+        )
+        return f"https://nb-{did}.example/analysis.ipynb", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9730,56 +9066,27 @@ def q160_ipynb_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kernels, zero shuffle after.",
 )
 def q161_subtitle_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gensub import build_srt, build_vtt
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                words = text.split(" ")
-                mid = len(words) // 2
-                words[mid] = f"<i>{words[mid]}</i>"
-                cues = [
-                    f"<v Narrator>Subtitle track {did} opening line",
-                    " ".join(words),
-                    "[Music]",
-                ]
-                if did % 2 == 0:
-                    blobs.append(build_vtt(cues))
-                    urls.append(f"https://cdn-{did}.example/track.vtt")
-                else:
-                    # SRT carries no speaker-tag syntax: plant the
-                    # narrator tag only on the VTT side
-                    blobs.append(build_srt([cues[0][12:], *cues[1:]]))
-                    urls.append(f"https://cdn-{did}.example/track.srt")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        words = text.split(" ")
+        mid = len(words) // 2
+        words[mid] = f"<i>{words[mid]}</i>"
+        cues = [
+            f"<v Narrator>Subtitle track {did} opening line",
+            " ".join(words),
+            "[Music]",
+        ]
+        if did % 2 == 0:
+            blob = build_vtt(cues)
+            return f"https://cdn-{did}.example/track.vtt", blob
+        else:
+            # SRT carries no speaker-tag syntax: plant the
+            # narrator tag only on the VTT side
+            blob = build_srt([cues[0][12:], *cues[1:]])
+            return f"https://cdn-{did}.example/track.srt", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9915,53 +9222,22 @@ def q162_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q163_wikitext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genwiki import build_wikitext
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                words = text.split(" ")
-                mid = len(words) // 2
-                words[mid] = f"[[Planted Topic {did}|{words[mid]}]]"
-                blobs.append(
-                    build_wikitext(
-                        f"Wiki article {did} heading",
-                        [" ".join(words)],
-                        host=f"nav-{did}.example",
-                        infobox_field=f"infobox chrome {did}",
-                        citation=f"citation chrome {did}",
-                    )
-                )
-                urls.append(f"https://wiki-{did}.example/wiki/Article")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        words = text.split(" ")
+        mid = len(words) // 2
+        words[mid] = f"[[Planted Topic {did}|{words[mid]}]]"
+        blob = build_wikitext(
+            f"Wiki article {did} heading",
+            [" ".join(words)],
+            host=f"nav-{did}.example",
+            infobox_field=f"infobox chrome {did}",
+            citation=f"citation chrome {did}",
+        )
+        return f"https://wiki-{did}.example/wiki/Article", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -9993,52 +9269,21 @@ def q163_wikitext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sanctioned Arrow kernels, zero shuffle after.",
 )
 def q164_eml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmail import build_eml
-
         encs = ("7bit", "base64", "quoted-printable")
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_eml(
-                        f"List post {did} subject",
-                        [text],
-                        quoted=f"quoted reply chrome {did}",
-                        signature=f"signature chrome {did}",
-                        encoding=encs[did % 3],
-                        html_alternative=bool(did % 2),
-                    )
-                )
-                urls.append(f"https://archive-{did}.example/msg.eml")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+        blob = build_eml(
+            f"List post {did} subject",
+            [text],
+            quoted=f"quoted reply chrome {did}",
+            signature=f"signature chrome {did}",
+            encoding=encs[did % 3],
+            html_alternative=bool(did % 2),
+        )
+        return f"https://archive-{did}.example/msg.eml", blob
+
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -10136,59 +9381,28 @@ def q165_thread_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero shuffle after.",
 )
 def q166_mbox_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmail import build_eml, build_mbox
-
         encs = ("7bit", "base64", "quoted-printable")
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_mbox(
-                        [
-                            build_eml(
-                                f"Archive post {did} first",
-                                [text],
-                                encoding=encs[did % 3],
-                            ),
-                            build_eml(
-                                f"Archive post {did} second",
-                                [f"second message body {did} kept"],
-                                html_alternative=True,
-                            ),
-                        ],
-                        escape_plant=bool(did % 2),
-                    )
-                )
-                urls.append(f"https://lists-{did}.example/arch.mbox")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+        blob = build_mbox(
+            [
+                build_eml(
+                    f"Archive post {did} first",
+                    [text],
+                    encoding=encs[did % 3],
+                ),
+                build_eml(
+                    f"Archive post {did} second",
+                    [f"second message body {did} kept"],
+                    html_alternative=True,
+                ),
+            ],
+            escape_plant=bool(did % 2),
+        )
+        return f"https://lists-{did}.example/arch.mbox", blob
+
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -10301,53 +9515,22 @@ def q167_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q168_ics_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genical import build_ics
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_ics(
-                        [
-                            (f"Calendar event {did} first", text),
-                            (
-                                f"Calendar event {did} second",
-                                f"agenda item {did} body; with details, inline",
-                            ),
-                        ],
-                        multiline_description=bool(did % 2),
-                    )
-                )
-                urls.append(f"https://cal-{did}.example/feed.ics")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_ics(
+            [
+                (f"Calendar event {did} first", text),
+                (
+                    f"Calendar event {did} second",
+                    f"agenda item {did} body; with details, inline",
+                ),
+            ],
+            multiline_description=bool(did % 2),
+        )
+        return f"https://cal-{did}.example/feed.ics", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -10441,77 +9624,42 @@ def q169_recrawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q170_zip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import gzip
-
         from toyocr_spark.fixtures.genmd import build_md
         from toyocr_spark.fixtures.gentar import build_tar
         from toyocr_spark.fixtures.genzip import build_zip
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<h1>Export doc {did} heading</h1>"
-                    f"<p>{text}</p></body></html>"
-                ).encode()
-                md = build_md(
-                    f"Export readme {did} heading long enough",
-                    [f"Readme body paragraph for export {did} inside the bundle"],
-                )
-                png = b"\x89PNG\r\n\x1a\n" + bytes(range(256))
-                blob = build_zip(
-                    [
-                        ("page.html", page),
-                        ("README.md", md),
-                        ("res/logo.png", png),
-                        (
-                            "inner.zip",
-                            build_zip([("x.txt", b"nested never recurses " * 3)]),
-                        ),
-                        (
-                            "inner.tar",
-                            build_tar([("y.txt", b"tar member never walks " * 3)]),
-                        ),
-                    ],
-                    with_dir=True,
-                )
-                if did % 2:
-                    blob = gzip.compress(blob, 9, mtime=0)
-                urls.append(f"https://zip-{did}.example/export.zip")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<h1>Export doc {did} heading</h1>"
+            f"<p>{text}</p></body></html>"
+        ).encode()
+        md = build_md(
+            f"Export readme {did} heading long enough",
+            [f"Readme body paragraph for export {did} inside the bundle"],
+        )
+        png = b"\x89PNG\r\n\x1a\n" + bytes(range(256))
+        blob = build_zip(
+            [
+                ("page.html", page),
+                ("README.md", md),
+                ("res/logo.png", png),
+                (
+                    "inner.zip",
+                    build_zip([("x.txt", b"nested never recurses " * 3)]),
+                ),
+                (
+                    "inner.tar",
+                    build_tar([("y.txt", b"tar member never walks " * 3)]),
+                ),
+            ],
+            with_dir=True,
+        )
+        if did % 2:
+            blob = gzip.compress(blob, 9, mtime=0)
+        return f"https://zip-{did}.example/export.zip", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -10549,68 +9697,28 @@ def q170_zip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero shuffle after.",
 )
 def q171_ps_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genps import build_ps, paragraph_ps
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                words = text.split(" ")
-                lines = [
-                    " ".join(words[i : i + 5]) for i in range(0, len(words), 5)
-                ]
-                body_para = paragraph_ps(50, 700, 11, 13, lines)
-                closing = paragraph_ps(
-                    50,
-                    700 - 13 * len(lines) - 27,  # beyond the 1.75x leading
-                    11,
-                    13,
-                    [
-                        f"closing paragraph {did} line a",
-                        f"closing paragraph {did} line b",
-                    ],
-                )
-                body = [closing, body_para] if did % 2 else [body_para, closing]
-                blobs.append(
-                    build_ps(
-                        [
-                            paragraph_ps(
-                                50, 740, 18, 20, [f"PS paper {did} title banner"]
-                            )
-                        ]
-                        + body,
-                        uri=f"https://cited-{did}.example/ref",
-                    )
-                )
-                urls.append(f"https://ps-{did}.example/paper.ps")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        words = text.split(" ")
+        lines = [" ".join(words[i : i + 5]) for i in range(0, len(words), 5)]
+        body_para = paragraph_ps(50, 700, 11, 13, lines)
+        closing = paragraph_ps(
+            50,
+            700 - 13 * len(lines) - 27,  # beyond the 1.75x leading
+            11,
+            13,
+            [
+                f"closing paragraph {did} line a",
+                f"closing paragraph {did} line b",
+            ],
+        )
+        body = [closing, body_para] if did % 2 else [body_para, closing]
+        title = paragraph_ps(50, 740, 18, 20, [f"PS paper {did} title banner"])
+        blob = build_ps([title] + body, uri=f"https://cited-{did}.example/ref")
+        return f"https://ps-{did}.example/paper.ps", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 # the planted mojibake triple (q172): _MOJI_FORM is the cp1252
@@ -10699,62 +9807,28 @@ def q172_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extraction kernel, zero shuffle.",
 )
 def q173_arc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import gzip
-
         from toyocr_spark.sources.arc import build_arc, parse_arc
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}<article><p>{text}"
-                    "</p></article></body></html>"
-                ).encode()
-                blob = build_arc(
-                    [
-                        (f"https://arc-{did}.example/page.html", "20090213233130", page),
-                        (f"https://arc-{did}.example/logo.gif", "20090213233131", b"GIF89a-not-admitted", "image/gif"),
-                    ],
-                    version=1 if did % 2 == 0 else 2,
-                )
-                if did % 4 >= 2:
-                    blob = gzip.compress(blob, 9, mtime=0)
-                for rec in parse_arc(blob):
-                    urls.append(rec["url"])
-                    blobs.append(rec["html"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}<article><p>{text}"
+            "</p></article></body></html>"
+        ).encode()
+        blob = build_arc(
+            [
+                (f"https://arc-{did}.example/page.html", "20090213233130", page),
+                (f"https://arc-{did}.example/logo.gif", "20090213233131", b"GIF89a-not-admitted", "image/gif"),
+            ],
+            version=1 if did % 2 == 0 else 2,
+        )
+        if did % 4 >= 2:
+            blob = gzip.compress(blob, 9, mtime=0)
+        # the gif record is not an admitted type: one page per ARC blob
+        (rec,) = parse_arc(blob)
+        return rec["url"], rec["html"]
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -10786,49 +9860,20 @@ def q173_arc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sanctioned kernel, zero shuffle.",
 )
 def q174_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
     from toyocr_spark.functions.textfns import render_markdown
     from toyocr_spark.pipeline import extract_pages
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
+    def make_page(did, text):
+        page = (
+            f"<html><body>{_NAV}"
+            f"<h1>Guide {did} overview</h1><article><p>{text}</p>"
+            f"<ul><li>first takeaway {did} with plenty of prose to keep the scorer content</li>"
+            f"<li>second takeaway {did} also long enough to clear every keep threshold</li></ul>"
+            "</article></body></html>"
+        ).encode()
+        return f"https://md-{did}.example/guide.html", page
 
-    def batches(it):
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}"
-                    f"<h1>Guide {did} overview</h1><article><p>{text}</p>"
-                    f"<ul><li>first takeaway {did} with plenty of prose to keep the scorer content</li>"
-                    f"<li>second takeaway {did} also long enough to clear every keep threshold</li></ul>"
-                    "</article></body></html>"
-                ).encode()
-                urls.append(f"https://md-{did}.example/guide.html")
-                blobs.append(page)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
-
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
+    out = extract_pages(_synth_pages(_docs(spark, sf_dir), make_page))
     return out.select(
         "url",
         render_markdown(F.col("extracted_text"), F.col("spans")).alias("markdown"),
@@ -11242,51 +10287,21 @@ def q179_revalidation_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q180_fb2_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genfb2 import build_fb2
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blob = build_fb2(
-                    f"Metadata Book Title {did}",
-                    f"Novel {did} chapter heading",
-                    [text],
-                    stanza_lines=[
-                        f"verse line one of stanza {did}",
-                        "verse line two keeps it going",
-                    ],
-                )
-                urls.append(f"https://fb2-{did}.example/book.fb2")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_fb2(
+            f"Metadata Book Title {did}",
+            f"Novel {did} chapter heading",
+            [text],
+            stanza_lines=[
+                f"verse line one of stanza {did}",
+                "verse line two keeps it going",
+            ],
+        )
+        return f"https://fb2-{did}.example/book.fb2", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11530,53 +10545,18 @@ def q183_domain_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_mobi.py). Map-only sanctioned kernels, zero shuffle.",
 )
 def q184_mobi_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-    nav = (
-        '<nav><ul><li><a href="/a">one link</a></li>'
-        '<li><a href="/b">two link</a></li></ul></nav>'
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmobi import build_mobi
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                page = (
-                    f"<html><body>{nav}"
-                    f"<h1>Book {did} chapter heading</h1>"
-                    f"<article><p>{text}</p></article></body></html>"
-                ).encode()
-                blobs.append(
-                    build_mobi(page, compression=2 if did % 2 == 0 else 1)
-                )
-                urls.append(f"https://mobi-{did}.example/book.mobi")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        page = (
+            f"<html><body>{_NAV}"
+            f"<h1>Book {did} chapter heading</h1>"
+            f"<article><p>{text}</p></article></body></html>"
+        ).encode()
+        blob = build_mobi(page, compression=2 if did % 2 == 0 else 1)
+        return f"https://mobi-{did}.example/book.mobi", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11605,61 +10585,31 @@ def q184_mobi_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero shuffle.",
 )
 def q185_ndjson_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         import json
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                recs = [
-                    {
-                        "title": f"Shard {did} record one",
-                        "text": text,
-                        "url": "https://meta-chrome.example",
-                    },
-                    {
-                        "text": (
-                            f"second record body for shard {did} long "
-                            "enough to clear every keep threshold easily"
-                        ),
-                        "id": did,
-                    },
-                    {"id": did, "meta": "record without any text field"},
-                ]
-                blob = (
-                    "\n".join(json.dumps(r) for r in recs).encode()
-                    + b'\n{"text": "truncat'
-                )
-                urls.append(f"https://jsonl-{did}.example/shard.jsonl")
-                blobs.append(blob)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        recs = [
+            {
+                "title": f"Shard {did} record one",
+                "text": text,
+                "url": "https://meta-chrome.example",
+            },
+            {
+                "text": (
+                    f"second record body for shard {did} long "
+                    "enough to clear every keep threshold easily"
+                ),
+                "id": did,
+            },
+            {"id": did, "meta": "record without any text field"},
+        ]
+        blob = (
+            "\n".join(json.dumps(r) for r in recs).encode()
+            + b'\n{"text": "truncat'
+        )
+        return f"https://jsonl-{did}.example/shard.jsonl", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11694,51 +10644,20 @@ def q185_ndjson_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q186_rst_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genrst import build_rst
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_rst(
-                        f"Docs page {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                        author=f"author chrome {did}",
-                        comment=f"comment chrome {did}",
-                        footnote=f"footnote chrome {did}",
-                    )
-                )
-                urls.append(f"https://rst-{did}.example/docs/index.rst")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_rst(
+            f"Docs page {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+            author=f"author chrome {did}",
+            comment=f"comment chrome {did}",
+            footnote=f"footnote chrome {did}",
+        )
+        return f"https://rst-{did}.example/docs/index.rst", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11770,51 +10689,20 @@ def q186_rst_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q187_man_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genman import build_man
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_man(
-                        f"Manual section {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                        comment=f"comment chrome {did}",
-                        source=f"source chrome {did}",
-                        manual=f"Manual Chrome {did}",
-                    )
-                )
-                urls.append(f"https://man-{did}.example/man1/cmd.1")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_man(
+            f"Manual section {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+            comment=f"comment chrome {did}",
+            source=f"source chrome {did}",
+            manual=f"Manual Chrome {did}",
+        )
+        return f"https://man-{did}.example/man1/cmd.1", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11848,52 +10736,21 @@ def q187_man_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "after.",
 )
 def q188_adoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genadoc import build_adoc
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_adoc(
-                        f"Docs page {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                        author=f"author chrome {did}",
-                        attribute=f"attribute chrome {did}",
-                        comment=f"comment chrome {did}",
-                        admonition=f"admonition chrome {did}",
-                    )
-                )
-                urls.append(f"https://adoc-{did}.example/docs/index.adoc")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_adoc(
+            f"Docs page {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+            author=f"author chrome {did}",
+            attribute=f"attribute chrome {did}",
+            comment=f"comment chrome {did}",
+            admonition=f"admonition chrome {did}",
+        )
+        return f"https://adoc-{did}.example/docs/index.adoc", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -11925,51 +10782,20 @@ def q188_adoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q189_org_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genorg import build_org
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_org(
-                        f"Docs page {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                        author=f"author chrome {did}",
-                        comment=f"comment chrome {did}",
-                        drawer_value=f"drawer chrome {did}",
-                    )
-                )
-                urls.append(f"https://org-{did}.example/notes/index.org")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_org(
+            f"Docs page {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+            author=f"author chrome {did}",
+            comment=f"comment chrome {did}",
+            drawer_value=f"drawer chrome {did}",
+        )
+        return f"https://org-{did}.example/notes/index.org", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12002,50 +10828,19 @@ def q189_org_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "after.",
 )
 def q190_texinfo_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gentexinfo import build_texinfo
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_texinfo(
-                        f"Manual title {did} heading",
-                        [text],
-                        filename=f"chrome-{did}.info",
-                        copying=f"copying chrome {did}",
-                        comment=f"comment chrome {did}",
-                    )
-                )
-                urls.append(f"https://texi-{did}.example/manual.texi")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_texinfo(
+            f"Manual title {did} heading",
+            [text],
+            filename=f"chrome-{did}.info",
+            copying=f"copying chrome {did}",
+            comment=f"comment chrome {did}",
+        )
+        return f"https://texi-{did}.example/manual.texi", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12081,53 +10876,22 @@ def q190_texinfo_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q191_docbook_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gendocbook import build_docbook
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_docbook(
-                        f"Docs page {did} heading",
-                        [text],
-                        version=4 if did % 2 == 0 else 5,
-                        host=f"nav-{did}.example",
-                        author=f"author chrome {did}",
-                        abstract=f"abstract chrome {did}",
-                        note=f"note chrome {did}",
-                        footnote=f"footnote chrome {did}",
-                    )
-                )
-                urls.append(f"https://db-{did}.example/book/index.xml")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_docbook(
+            f"Docs page {did} heading",
+            [text],
+            version=4 if did % 2 == 0 else 5,
+            host=f"nav-{did}.example",
+            author=f"author chrome {did}",
+            abstract=f"abstract chrome {did}",
+            note=f"note chrome {did}",
+            footnote=f"footnote chrome {did}",
+        )
+        return f"https://db-{did}.example/book/index.xml", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12159,50 +10923,19 @@ def q191_docbook_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "after.",
 )
 def q192_mdoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genmdoc import build_mdoc
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_mdoc(
-                        f"Manual section {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                        comment=f"comment chrome {did}",
-                        os_name=f"os chrome {did}",
-                    )
-                )
-                urls.append(f"https://mdoc-{did}.example/man1/cmd.1")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_mdoc(
+            f"Manual section {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+            comment=f"comment chrome {did}",
+            os_name=f"os chrome {did}",
+        )
+        return f"https://mdoc-{did}.example/man1/cmd.1", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12233,48 +10966,17 @@ def q192_mdoc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sanctioned Arrow kernels, zero shuffle after.",
 )
 def q193_gemtext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.gengemtext import build_gemtext
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_gemtext(
-                        f"Capsule page {did} heading",
-                        [text],
-                        host=f"nav-{did}.example",
-                    )
-                )
-                urls.append(f"https://gmi-{did}.example/index.gmi")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_gemtext(
+            f"Capsule page {did} heading",
+            [text],
+            host=f"nav-{did}.example",
+        )
+        return f"https://gmi-{did}.example/index.gmi", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12307,53 +11009,22 @@ def q193_gemtext_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q194_po_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genpo import build_po
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_po(
-                        [
-                            (f"source title {did} chrome", f"Catalog title {did} target"),
-                            (f"source body {did} chrome", text),
-                        ],
-                        project=f"project chrome {did}",
-                        comment=f"comment chrome {did}",
-                        msgctxt=f"context chrome {did}",
-                        multiline_index=0,
-                    )
-                )
-                urls.append(f"https://po-{did}.example/locale/app.po")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_po(
+            [
+                (f"source title {did} chrome", f"Catalog title {did} target"),
+                (f"source body {did} chrome", text),
+            ],
+            project=f"project chrome {did}",
+            comment=f"comment chrome {did}",
+            msgctxt=f"context chrome {did}",
+            multiline_index=0,
+        )
+        return f"https://po-{did}.example/locale/app.po", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12386,51 +11057,20 @@ def q194_po_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q195_ttml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genttml import build_ttml
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_ttml(
-                        [f"Caption track {did} opener", text],
-                        legacy_ns=bool(did % 2),
-                        title=f"head title chrome {did}",
-                        copyright_text=f"copyright chrome {did}",
-                        with_spans=True,
-                        with_br=True,
-                    )
-                )
-                urls.append(f"https://ttml-{did}.example/captions.ttml")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_ttml(
+            [f"Caption track {did} opener", text],
+            legacy_ns=bool(did % 2),
+            title=f"head title chrome {did}",
+            copyright_text=f"copyright chrome {did}",
+            with_spans=True,
+            with_br=True,
+        )
+        return f"https://ttml-{did}.example/captions.ttml", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12463,52 +11103,21 @@ def q195_ttml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q196_bibtex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genbib import build_bib
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_bib(
-                        [(f"Planted study {did} title", text)],
-                        author=f"Chrome, Author {did}",
-                        journal_macro=f"Journal Chrome {did}",
-                        comment=f"comment chrome {did}",
-                        preamble=f"preamble chrome {did}",
-                        quoted_index=0 if did % 2 == 0 else None,
-                        concat_index=0 if did % 2 == 1 else None,
-                    )
-                )
-                urls.append(f"https://bib-{did}.example/refs.bib")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_bib(
+            [(f"Planted study {did} title", text)],
+            author=f"Chrome, Author {did}",
+            journal_macro=f"Journal Chrome {did}",
+            comment=f"comment chrome {did}",
+            preamble=f"preamble chrome {did}",
+            quoted_index=0 if did % 2 == 0 else None,
+            concat_index=0 if did % 2 == 1 else None,
+        )
+        return f"https://bib-{did}.example/refs.bib", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 @_q(
@@ -12540,52 +11149,21 @@ def q196_bibtex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow kernels, zero shuffle after.",
 )
 def q197_ms_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from toyocr_spark.pipeline import extract_pages
-
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), False),
-        ]
-    )
-
-    def batches(it):
+    def make_page(did, text):
         from toyocr_spark.fixtures.genms import build_ms
 
-        for b in it:
-            urls, blobs = [], []
-            for did, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                blobs.append(
-                    build_ms(
-                        f"Planted report {did} title",
-                        [text],
-                        author=f"author chrome {did}",
-                        institution=f"institute chrome {did}",
-                        comment=f"comment chrome {did}",
-                        footnote=f"footnote chrome {did}",
-                        equation=f"equation chrome {did}",
-                    )
-                )
-                urls.append(f"https://ms-{did}.example/papers/tr.ms")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(blobs, pa.binary())],
-                names=["url", "html"],
-            )
+        blob = build_ms(
+            f"Planted report {did} title",
+            [text],
+            author=f"author chrome {did}",
+            institution=f"institute chrome {did}",
+            comment=f"comment chrome {did}",
+            footnote=f"footnote chrome {did}",
+            equation=f"equation chrome {did}",
+        )
+        return f"https://ms-{did}.example/papers/tr.ms", blob
 
-    pages = d.mapInArrow(batches, schema)
-    out = extract_pages(pages)
-    return out.select(
-        "url", "extracted_text", F.col("n_kept").cast("int").alias("n_kept")
-    )
+    return _synth_extract(_docs(spark, sf_dir), make_page)
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,7 @@ from toyocr_spark.functions.urlfns import canonicalize_url, surt_key
 
 INDEX_DIR = "index"
 CLUSTER_IDX = "cluster.idx"
+_CDX_COLUMNS = ("surt_key", "ts14", "url", "digest", "n_bytes")
 
 
 def cdx_rows(
@@ -46,7 +47,11 @@ def cdx_rows(
     range-partitioned sink without an extra shuffle. `keep_cols`
     passes capture provenance through (e.g. read_warc_members'
     warc_file/warc_offset/warc_length, which make every index row
-    range-addressable back into its archive file)."""
+    range-addressable back into its archive file). A `keep_cols` name
+    that repeats an emitted column is a ValueError."""
+    clash = sorted(set(keep_cols) & set(_CDX_COLUMNS))
+    if clash:
+        raise ValueError(f"keep_cols repeat emitted CDX columns: {clash}")
     # canonicalize once into a NAMED column and derive the SURT key
     # from the column reference — surt_key's internal reuse otherwise
     # clones the canonicalize subtree ~6x in the unresolved plan and
@@ -61,12 +66,7 @@ def cdx_rows(
         *[F.col(c) for c in keep_cols],
     )
     return base.select(
-        surt_key(F.col("url")).alias("surt_key"),
-        "ts14",
-        "url",
-        "digest",
-        "n_bytes",
-        *keep_cols,
+        surt_key(F.col("url")).alias("surt_key"), *_CDX_COLUMNS[1:], *keep_cols
     )
 
 
