@@ -87,6 +87,20 @@ def test_malformed_pdfs_are_deterministic_and_quiet():
     assert extract(b"%PDF-1.4\n1 0 obj << /Length 99999 >> stream\nBT Tj ET").text == ""
 
 
+def test_non_numeric_text_operands_skip_the_operator():
+    # a string, array or garbled number where a Tf/TL/Td/TD/Tm operand
+    # belongs used to raise out of extract(); the operator is skipped
+    line = "(a line that survives the bad operator) Tj ET"
+    clean = _one(f"BT /F1 12 Tf 50 700 Td {line}")
+    for bad in ("50 (x) Td", "(big) Tf", "[1] TL", "(a) (b) TD", "1 0 0 (s) 50 700 Tm"):
+        pdf = _one(f"BT /F1 12 Tf 50 700 Td {bad} {line}")
+        assert tokenize_pdf(pdf) == tokenize_pdf(clean), bad
+        assert extract(pdf).text == "a line that survives the bad operator"
+    # a malformed /MediaBox number falls back to the default page height
+    bad_box = clean.replace(b"/MediaBox [0 0", b"/MediaBox [0 1.2.3", 1)
+    assert tokenize_pdf(bad_box) == tokenize_pdf(clean)
+
+
 def test_generator_xycut_round_trip():
     for seed in range(25):
         pdf, intended = _pdf_page(random.Random(seed))

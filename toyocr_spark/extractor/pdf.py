@@ -68,6 +68,9 @@ _CHAR_WIDTH_EM = 0.5  # width estimate: monospace-ish advance per glyph
 _MEDIABOX_RE = re.compile(
     rb"/MediaBox\s*\[\s*(-?[\d.]+)\s+(-?[\d.]+)\s+(-?[\d.]+)\s+(-?[\d.]+)"
 )
+# what float() raises on a text operator's non-numeric operand (a
+# string, an array or garbled bytes); the operator is then skipped
+_NOT_NUMERIC = (TypeError, ValueError)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\s+\d+\s+R)")
 _NUM_RE = re.compile(rb"[-+]?(?:\d+\.?\d*|\.\d+)")
 _OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
@@ -1487,24 +1490,40 @@ def _runs(
                 lines = None
                 cur = None
             elif op == b"Tf" and st:
-                tf = float(st[-1])
-                size = tf * scale
-                if font_cmaps:
-                    cmap = font_cmaps.get(last_name)
+                try:
+                    tf = float(st[-1])
+                except _NOT_NUMERIC:
+                    pass
+                else:
+                    size = tf * scale
+                    if font_cmaps:
+                        cmap = font_cmaps.get(last_name)
             elif op == b"TL" and st:
-                leading = float(st[-1])
+                try:
+                    leading = float(st[-1])
+                except _NOT_NUMERIC:
+                    pass
             elif op in (b"Td", b"TD") and len(st) >= 2:
-                tx, ty = float(st[-2]), float(st[-1])
-                lx += tx
-                ly += ty
-                cur = None
-                if op == b"TD":
-                    leading = -ty
+                try:
+                    tx, ty = float(st[-2]), float(st[-1])
+                except _NOT_NUMERIC:
+                    pass
+                else:
+                    lx += tx
+                    ly += ty
+                    cur = None
+                    if op == b"TD":
+                        leading = -ty
             elif op == b"Tm" and len(st) >= 6:
-                scale = float(st[-3]) or 1.0
-                lx, ly = float(st[-2]), float(st[-1])
-                size = tf * scale
-                cur = None
+                try:
+                    sx, tx, ty = float(st[-3]), float(st[-2]), float(st[-1])
+                except _NOT_NUMERIC:
+                    pass
+                else:
+                    scale = sx or 1.0
+                    lx, ly = tx, ty
+                    size = tf * scale
+                    cur = None
             elif op == b"T*":
                 ly -= leading
                 cur = None
@@ -1547,7 +1566,10 @@ def tokenize_pdf(data: bytes) -> list[Block]:
     absolutely-positioned HTML (the shared layout pass)."""
     data = decrypt_pdf(data)
     m = _MEDIABOX_RE.search(data)
-    page_h = float(m.group(4)) - float(m.group(2)) if m else _DEFAULT_PAGE_H
+    try:
+        page_h = float(m.group(4)) - float(m.group(2)) if m else _DEFAULT_PAGE_H
+    except ValueError:  # a malformed number such as "1.2.3" or "."
+        page_h = _DEFAULT_PAGE_H
     if page_h <= 0:
         page_h = _DEFAULT_PAGE_H
     band = page_h + _PAGE_BAND_GAP

@@ -16,6 +16,7 @@ Determinism rules for oracle parity (SURVEY.md §7):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -65,22 +66,42 @@ def _q(name: str, sql: str | None, note: str = ""):
     return deco
 
 
+def _table_signature(path: str) -> tuple | None:
+    """(name, st_mtime_ns, st_size, st_ino) of a parquet path and of
+    every entry in it; None (so no plan reuse) when the path cannot be
+    stat'ed locally, e.g. a remote URI."""
+    try:
+        stats = [("", os.stat(path))]
+        if os.path.isdir(path):
+            with os.scandir(path) as it:
+                stats += [(e.name, e.stat()) for e in it]
+    except OSError:
+        return None
+    return tuple(sorted((n, s.st_mtime_ns, s.st_size, s.st_ino) for n, s in stats))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Per-session plan reuse: spark.read.parquet re-lists the directory
     # and re-reads the footer schema on EVERY call (~120 ms of
     # synchronous driver-side work), which a catalog table registration
     # would pay once. The DataFrame is an immutable logical plan — reuse
     # it across queries in the same session; every action still scans
-    # the parquet files themselves (no data or results are cached).
+    # the parquet files themselves (no data or results are cached). The
+    # plan captured its file listing, so it is reused only while the
+    # table's stat signature is unchanged: a table rewritten in the same
+    # session is read afresh.
     cache = getattr(spark, "_toyocr_table_plans", None)
     if cache is None:
         cache = {}
         spark._toyocr_table_plans = cache  # type: ignore[attr-defined]
-    key = (sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        cache[key] = df
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _table_signature(path)
+    hit = cache.get((sf_dir, name))
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    df = spark.read.parquet(path)
+    if sig is not None:
+        cache[(sf_dir, name)] = (sig, df)
     return df
 
 

@@ -5,6 +5,18 @@ AQE on (runtime re-plan + skew-join splitting), Arrow on (the
 mapInPandas hot path), shuffle partitions ~ cores locally (on a real
 cluster: 2-3x total cores, or let AQE coalesce), UTC session TZ so
 timestamps compare bit-stably against external oracles.
+
+Python workers start from ``toyocr_spark.pydaemon`` instead of the
+stock ``pyspark.daemon``. Before CPython 3.13, every Python task
+re-parses the directory of ``pyspark.zip`` once per imported
+``pyspark`` subpackage (14-16 times, 0.2-0.4 s) inside
+``importlib.invalidate_caches()``; that fixed cost exceeded the
+extraction kernel's own time per partition. The daemon re-reads an
+archive only when its stat signature changed (see its docstring), and
+runs the stock daemon unchanged on Python >= 3.13. The package root
+goes on the executors' ``PYTHONPATH`` so the daemon (and the kernel)
+import from any driver working directory. Sessions not built here,
+such as the ``spark-submit --py-files`` jobs, keep the stock daemon.
 """
 
 from __future__ import annotations
@@ -17,6 +29,9 @@ from pyspark.sql import SparkSession
 # dispatch, small enough that a batch of worst-case pages fits in memory
 # (the IMS_PER_BATCH analogue, /root/reference/data/build.py:197-242)
 ARROW_BATCH_ROWS = 512
+
+# the directory holding the toyocr_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -58,6 +73,8 @@ def get_spark(
         # with full JVM context — only the Python call-site annotation
         # is dropped (the documented performance switch for this).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "toyocr_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
