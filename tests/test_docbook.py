@@ -11,7 +11,7 @@ import random
 
 import pytest
 
-from toyocr_spark.extractor.core import extract
+from toyocr_spark.extractor.core import dispatch_blocks, extract
 from toyocr_spark.extractor.docbookleg import (
     docbook_links,
     is_docbook,
@@ -55,6 +55,20 @@ def test_gate_rejects_html_prose_and_other_xml():
 def test_malformed_xml_tokenizes_empty_for_html_fallback():
     truncated = _doc()[: len(_doc()) // 2]
     assert tokenize_docbook(truncated) == []
+
+
+def test_undecodable_xml_encoding_falls_through_to_html():
+    """An encoding declaration expat cannot use (unknown, not a text
+    codec, multi-byte) is malformed XML: the leg yields nothing and the
+    page goes to the HTML tokenizer instead of raising."""
+    from toyocr_spark.extractor.tokenizer import tokenize
+
+    for enc in (b"no-such-codec", b"rot13", b"utf-32"):
+        doc = _doc().replace(b'encoding="UTF-8"', b'encoding="' + enc + b'"', 1)
+        assert enc in doc
+        assert tokenize_docbook(doc) == []
+        assert dispatch_blocks(doc) == tokenize(doc)
+        assert extract(doc).text
 
 
 # --- structure / chrome ---------------------------------------------------

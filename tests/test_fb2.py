@@ -69,6 +69,20 @@ def test_quiet_skip_on_malformed():
     assert "visible prose" in r.text
 
 
+def test_undecodable_xml_encoding_falls_through_to_html():
+    """An encoding declaration expat cannot use (unknown, not a text
+    codec, multi-byte) is malformed XML: the leg yields nothing and the
+    page goes to the HTML tokenizer instead of raising."""
+    from toyocr_spark.extractor.tokenizer import tokenize
+
+    for enc in (b"no-such-codec", b"rot13", b"utf-32"):
+        doc = _book().replace(b'encoding="utf-8"', b'encoding="' + enc + b'"', 1)
+        assert enc in doc
+        assert tokenize_fb2(doc) == []
+        assert dispatch_blocks(doc) == tokenize(doc)
+        assert extract(doc).text
+
+
 def test_gate_false_positive_page_survives():
     """An HTML article quoting '<FictionBook' as its LEADING markup
     cannot lose its content: the root-anchored gate refuses pages

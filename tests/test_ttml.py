@@ -10,7 +10,7 @@ import random
 
 import pytest
 
-from toyocr_spark.extractor.core import extract
+from toyocr_spark.extractor.core import dispatch_blocks, extract
 from toyocr_spark.extractor.docbookleg import is_docbook
 from toyocr_spark.extractor.fb2leg import is_fb2
 from toyocr_spark.extractor.ttmlleg import is_ttml, tokenize_ttml
@@ -50,6 +50,20 @@ def test_gate_rejects_html_other_xml_and_prose():
 def test_malformed_xml_tokenizes_empty_for_html_fallback():
     truncated = _doc()[: len(_doc()) // 2]
     assert tokenize_ttml(truncated) == []
+
+
+def test_undecodable_xml_encoding_falls_through_to_html():
+    """An encoding declaration expat cannot use (unknown, not a text
+    codec, multi-byte) is malformed XML: the leg yields nothing and the
+    page goes to the HTML tokenizer instead of raising."""
+    from toyocr_spark.extractor.tokenizer import tokenize
+
+    for enc in (b"no-such-codec", b"rot13", b"utf-32"):
+        doc = _doc().replace(b'encoding="UTF-8"', b'encoding="' + enc + b'"', 1)
+        assert enc in doc
+        assert tokenize_ttml(doc) == []
+        assert dispatch_blocks(doc) == tokenize(doc)
+        assert extract(doc).text
 
 
 # --- structure / chrome ---------------------------------------------------

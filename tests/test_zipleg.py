@@ -152,6 +152,41 @@ def test_links_route_per_member_format():
     assert tar_links(build_tar([("a.zip", zp)])) == []
 
 
+# --- unreadable archives and members --------------------------------------
+
+
+def _central_entry(data: bytes, name: bytes) -> int:
+    """Offset of ``name``'s central-directory header."""
+    k = data.find(b"PK\x01\x02")
+    while data[k + 46 : k + 46 + int.from_bytes(data[k + 28 : k + 30], "little")] != name:
+        k = data.find(b"PK\x01\x02", k + 4)
+    return k
+
+
+def test_unsupported_zip_version_is_a_quiet_skip():
+    # "version needed to extract" 9.8: zipfile refuses the whole archive
+    # (NotImplementedError) as it reads the central directory
+    buf = bytearray(_bundle())
+    buf[_central_entry(buf, b"README.md") + 6] = 98
+    assert tokenize_zip(bytes(buf)) == []
+    assert zip_links(bytes(buf)) == []
+    assert extract(bytes(buf)).text == ""
+
+
+def test_encrypted_member_is_skipped_and_the_rest_extracts():
+    # general-purpose flag bit 0 marks page.html encrypted: opening it
+    # needs a password (RuntimeError); the README still extracts
+    buf = bytearray(_bundle())
+    buf[_central_entry(buf, b"page.html") + 8] |= 0x01
+    assert extract(bytes(buf)).text.split("\n") == [
+        "Zip Readme Heading Long Enough",
+        "readme body paragraph long enough to keep in the output",
+    ]
+    links = zip_links(_bundle())
+    assert "https://zipped.example/x" in links
+    assert zip_links(bytes(buf)) == [u for u in links if u != "https://zipped.example/x"]
+
+
 # --- fuzz ---------------------------------------------------------------------
 
 

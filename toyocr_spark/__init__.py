@@ -6,7 +6,7 @@ DataFrame pipeline over Common-Crawl-style page tables:
 
     pages(url, warc_ts, html, text, lang)
       -> repartition(hash(url), salted for hot hosts)
-      -> mapInPandas(extract)          # HTML -> blocks -> scores -> spans
+      -> mapInArrow(extract)           # HTML -> blocks -> scores -> spans
       -> (url, extracted_text, spans)  # byte-identical to the frozen oracle
       -> parquet/Iceberg sink + per-partition lineage + commit-log resume
 

@@ -1,6 +1,6 @@
 """extract(html) — the frozen deterministic extraction kernel.
 
-This is BOTH the engine kernel (run batched inside mapInPandas) and the
+This is BOTH the engine kernel (run batched inside mapInArrow) and the
 reference oracle used to populate the fixture ``text`` column — the
 same construction as the reference vendoring the official ICDAR scorer
 verbatim (/root/reference/evaluation/text_eval.py:171-172): sharing the

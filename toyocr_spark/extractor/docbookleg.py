@@ -52,7 +52,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 _SKIP_RE = re.compile(rb"\s+|<\?.*?\?>|<!--.*?-->|<![^>]*>", re.S)
 _ROOTS = (b"<book", b"<article", b"<chapter", b"<part", b"<set", b"<refentry")
@@ -182,7 +182,7 @@ def tokenize_docbook(data: bytes | str) -> list[Block]:
         data = data.encode("utf-8", "ignore")
     try:
         root = ElementTree.fromstring(data)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     if _local(root.tag) not in _ROOT_NAMES:
         return []
@@ -297,7 +297,7 @@ def docbook_links(data: bytes | str) -> list[str]:
         data = data.encode("utf-8", "ignore")
     try:
         root = ElementTree.fromstring(data)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     if _local(root.tag) not in _ROOT_NAMES:
         return []

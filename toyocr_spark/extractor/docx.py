@@ -27,7 +27,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 ZIP_MAGIC = b"PK\x03\x04"
 _DOC_PART = "word/document.xml"
@@ -129,7 +129,7 @@ def docx_links(data: bytes) -> list[str]:
     try:
         rels_root = ElementTree.fromstring(rels_xml)
         doc_root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     targets: dict[str, str] = {}
     for rel in rels_root.iter(_PKG_REL):
@@ -162,7 +162,7 @@ def tokenize_docx(data: bytes) -> list[Block]:
         return []
     try:
         root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     body = root.find(_W + "body")
     if body is None:

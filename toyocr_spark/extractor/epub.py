@@ -23,7 +23,7 @@ import re
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, tokenize
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, tokenize
 
 ZIP_MAGIC = b"PK\x03\x04"
 _CONTAINER_PART = "META-INF/container.xml"
@@ -49,7 +49,7 @@ def _spine_parts(zf: zipfile.ZipFile) -> list[str]:
     OPF -> manifest/spine."""
     try:
         container = ElementTree.fromstring(zf.read(_CONTAINER_PART))
-    except (KeyError, ElementTree.ParseError):
+    except (KeyError, *XML_ERRORS):
         return []
     rootfile = container.find(f"{_CNT}rootfiles/{_CNT}rootfile")
     if rootfile is None:
@@ -59,7 +59,7 @@ def _spine_parts(zf: zipfile.ZipFile) -> list[str]:
         return []
     try:
         opf = ElementTree.fromstring(zf.read(opf_path))
-    except (KeyError, ElementTree.ParseError):
+    except (KeyError, *XML_ERRORS):
         return []
     base = posixpath.dirname(opf_path)
     href_by_id: dict[str, str] = {}

@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 # leading constructs an XML head may carry before the root element:
 # BOM / whitespace, the prologue, comments, a DOCTYPE — the gate skips
@@ -116,7 +116,7 @@ def tokenize_fb2(data: bytes | str) -> list[Block]:
         data = data.encode("utf-8", "ignore")
     try:
         root = ElementTree.fromstring(data)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     if _local(root.tag) != "FictionBook":
         return []

@@ -36,7 +36,7 @@ import zipfile
 from xml.etree import ElementTree
 
 from toyocr_spark.extractor.odt import _paragraph_block
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 ZIP_MAGIC = b"PK\x03\x04"
 _MIMETYPE = b"application/vnd.oasis.opendocument.spreadsheet"
@@ -119,7 +119,7 @@ def tokenize_ods(data: bytes) -> list[Block]:
         return []
     try:
         root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     body = root.find(f"{_OFFICE}body/{_OFFICE}spreadsheet")
     if body is None:

@@ -30,7 +30,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 ZIP_MAGIC = b"PK\x03\x04"
 _MIMETYPE = b"application/vnd.oasis.opendocument.text"
@@ -127,7 +127,7 @@ def tokenize_odt(data: bytes) -> list[Block]:
         return []
     try:
         root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     body = root.find(f"{_OFFICE}body/{_OFFICE}text")
     if body is None:

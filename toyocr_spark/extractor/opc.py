@@ -15,6 +15,8 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
+from toyocr_spark.extractor.tokenizer import XML_ERRORS
+
 _CORE_PART = "docProps/core.xml"
 _DC = "{http://purl.org/dc/elements/1.1/}"
 _DCTERMS = "{http://purl.org/dc/terms/}"
@@ -57,7 +59,7 @@ def opc_hyperlinks(data: bytes) -> list[str]:
     for xml in rels_parts:
         try:
             root = ElementTree.fromstring(xml)
-        except ElementTree.ParseError:
+        except XML_ERRORS:
             continue
         for rel in root.iter(_PKG_REL):
             if rel.get("Type", "").endswith("/hyperlink") and rel.get(
@@ -82,7 +84,7 @@ def opc_core_properties(data: bytes) -> list[tuple[str, str]]:
         return []
     try:
         root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     out: list[tuple[str, str]] = []
     for key, tag in _PROPS:

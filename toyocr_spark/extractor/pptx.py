@@ -24,7 +24,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 ZIP_MAGIC = b"PK\x03\x04"
 _PRES_PART = "ppt/presentation.xml"
@@ -52,7 +52,7 @@ def _slide_order(zf: zipfile.ZipFile) -> list[str]:
     try:
         pres = ElementTree.fromstring(zf.read(_PRES_PART))
         rels = ElementTree.fromstring(zf.read(_PRES_RELS))
-    except (KeyError, ElementTree.ParseError):
+    except (KeyError, *XML_ERRORS):
         return []
     target_by_id: dict[str, str] = {}
     for rel in rels.iter(_PKG_REL):
@@ -93,7 +93,7 @@ def tokenize_pptx(data: bytes) -> list[Block]:
     for xml in parts:
         try:
             root = ElementTree.fromstring(xml)
-        except ElementTree.ParseError:
+        except XML_ERRORS:
             continue
         tree = root.find(f"{_P}cSld/{_P}spTree")
         if tree is None:

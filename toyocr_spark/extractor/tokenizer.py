@@ -19,6 +19,15 @@ from __future__ import annotations
 import html as _htmlmod
 import re
 from dataclasses import dataclass, field
+from xml.etree import ElementTree
+
+
+# What ElementTree.fromstring raises on bytes it cannot read as XML:
+# malformed markup (ParseError), or an encoding declaration naming a
+# codec it does not know (LookupError) or one expat cannot use, such as
+# a multi-byte codec (ValueError, UnicodeError). The XML legs treat all
+# of them as "not this format".
+XML_ERRORS = (ElementTree.ParseError, LookupError, ValueError)
 
 
 # --- precompiled patterns (module-level: compiled once per executor) ---

@@ -36,7 +36,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 _SKIP_RE = re.compile(rb"\s+|<\?.*?\?>|<!--.*?-->|<![^>]*>", re.S)
 _TTML_NS = ("http://www.w3.org/ns/ttml", "http://www.w3.org/2006/10/ttaf1")
@@ -118,7 +118,7 @@ def tokenize_ttml(data: bytes | str) -> list[Block]:
         data = data.encode("utf-8", "ignore")
     try:
         root = ElementTree.fromstring(data)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     if _local(root.tag) != "tt":
         return []

@@ -26,7 +26,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
 
 ZIP_MAGIC = b"PK\x03\x04"
 _WORKBOOK_PART = "xl/workbook.xml"
@@ -57,7 +57,7 @@ def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
         return []
     try:
         root = ElementTree.fromstring(xml)
-    except ElementTree.ParseError:
+    except XML_ERRORS:
         return []
     out: list[str] = []
     for si in root.iterfind(_S + "si"):
@@ -92,7 +92,7 @@ def _sheet_order(zf: zipfile.ZipFile) -> list[tuple[str, str]]:
     try:
         wb = ElementTree.fromstring(zf.read(_WORKBOOK_PART))
         rels = ElementTree.fromstring(zf.read(_WORKBOOK_RELS))
-    except (KeyError, ElementTree.ParseError):
+    except (KeyError, *XML_ERRORS):
         return []
     target_by_id: dict[str, str] = {}
     for rel in rels.iter(_PKG_REL):
@@ -130,7 +130,7 @@ def tokenize_xlsx(data: bytes) -> list[Block]:
     for name, xml in parts:
         try:
             root = ElementTree.fromstring(xml)
-        except ElementTree.ParseError:
+        except XML_ERRORS:
             continue
         sheet_data = root.find(_S + "sheetData")
         if sheet_data is None:

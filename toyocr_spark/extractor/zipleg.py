@@ -85,7 +85,9 @@ def _members(data: bytes):
 
     try:
         zf = zipfile.ZipFile(io.BytesIO(bytes(data)))
-    except (zipfile.BadZipFile, OSError, EOFError, ValueError):
+    except (zipfile.BadZipFile, OSError, EOFError, ValueError, NotImplementedError):
+        # NotImplementedError: a central-directory entry needs a newer
+        # zip version than zipfile reads
         return
     try:
         n = 0
@@ -99,8 +101,9 @@ def _members(data: bytes):
                 with zf.open(info) as f:
                     payload = f.read(MAX_MEMBER_BYTES)
             except (zipfile.BadZipFile, OSError, EOFError, ValueError,
-                    zlib.error, NotImplementedError):
-                # corrupt streams / unsupported compression methods:
+                    zlib.error, NotImplementedError, RuntimeError):
+                # corrupt streams / unsupported compression methods /
+                # encrypted members (RuntimeError: password required):
                 # member-local quiet skip
                 continue
             if is_tar(payload) or bytes(payload[:4]) == _ZIP_MAGIC:

@@ -1,6 +1,6 @@
 """The flagship extraction job (SURVEY.md S3.2's Spark equivalent):
 
-    pages -> salted repartition by url-hash -> mapInPandas(extract)
+    pages -> salted repartition by url-hash -> mapInArrow(extract)
           -> (url, extracted_text, spans) -> parquet sink
           + per-partition lineage rows + chunked commit-log resume
 
@@ -34,6 +34,7 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -91,6 +92,35 @@ LINEAGE_SCHEMA = T.StructType(
 # input bounds every output array).
 _OUT_BATCH_BYTES = 256 << 20
 
+# Body bytes the extraction memo (see _extract_batches) may hold before
+# it is cleared.
+_MEMO_BYTES = 64 << 20
+
+
+class _Memo(dict):
+    """html_digest -> (body, ExtractResult), plus the body bytes held."""
+
+    nbytes = 0
+
+
+# The memo of the (stage id, strategy) that last ran on this worker.
+_memo_scope: tuple[int, str] | None = None
+_memo = _Memo()
+
+
+def _scope_memo(strategy: str) -> _Memo:
+    """The memo shared by every call of one (stage, strategy) on this
+    Python worker; a new, private one outside a Spark task."""
+    global _memo_scope, _memo
+
+    tc = TaskContext.get()
+    if tc is None:
+        return _Memo()
+    scope = (tc.stageId(), strategy)
+    if scope != _memo_scope:
+        _memo_scope, _memo = scope, _Memo()
+    return _memo
+
 
 def _extract_batches(
     it: Iterator["pa.RecordBatch"], strategy: str = "density"
@@ -102,7 +132,18 @@ def _extract_batches(
     offset/child arrays entirely in Arrow C code — measurably lower
     per-doc serialization overhead and memory churn than dict-per-span
     (the batch_padding-free analogue of /root/reference/inference/
-    utils.py:6-49: ragged batches, zero copy-padding)."""
+    utils.py:6-49: ragged batches, zero copy-padding).
+
+    The kernel runs once per distinct body: a memo keyed by the
+    JVM-computed ``html_digest`` keeps each body with its result, and a
+    row whose bytes equal the kept body's reuses that result (exact —
+    equal digests over different bytes each run the kernel; results are
+    frozen, so sharing one is safe). The memo lives for one stage and
+    strategy on one Python worker, so the tasks of a stage that a reused
+    worker runs share it, and it is dropped when the worker next runs
+    another stage or strategy: no other job, pass or resume chunk sees
+    it. Outside a Spark task it lives for the one call. It is cleared
+    whenever it would hold more than ``_MEMO_BYTES`` of bodies."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -113,6 +154,21 @@ def _extract_batches(
 
         def extract(h):  # noqa: ANN001 — registry-dispatched variant
             return extract_with(h, strategy)
+
+    memo = _scope_memo(strategy)
+
+    def extract_once(h, digest):  # noqa: ANN001
+        hit = memo.get(digest)
+        if hit is not None and hit[0] == h:
+            return hit[1]
+        r = extract(h)
+        n = len(h) if h else 0
+        if memo.nbytes + n > _MEMO_BYTES:
+            memo.clear()
+            memo.nbytes = 0
+        memo[digest] = (h, r)
+        memo.nbytes += n
+        return r
 
     span_struct = pa.struct(
         [pa.field("start", pa.int64(), False), pa.field("end", pa.int64(), False),
@@ -140,7 +196,7 @@ def _extract_batches(
         urls = batch.column(0)
         htmls = batch.column(1).to_pylist()
         digests = batch.column(2)  # JVM-computed xxhash64, passed through
-        results = [extract(h) for h in htmls]
+        results = list(map(extract_once, htmls, digests.to_pylist()))
         # flat span arrays + offsets -> list<struct> with no per-row dicts
         starts: list[int] = []
         ends: list[int] = []

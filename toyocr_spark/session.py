@@ -2,7 +2,7 @@
 
 Settings chosen for the 100 TB design point and scaled to local mode:
 AQE on (runtime re-plan + skew-join splitting), Arrow on (the
-mapInPandas hot path), shuffle partitions ~ cores locally (on a real
+mapInArrow hot path), shuffle partitions ~ cores locally (on a real
 cluster: 2-3x total cores, or let AQE coalesce), UTC session TZ so
 timestamps compare bit-stably against external oracles.
 
