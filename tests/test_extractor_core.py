@@ -439,3 +439,21 @@ def test_tokenizer_block_state_semantics():
     # ordinals number only emitted blocks, in document order
     blocks = tokenize(b"<p>one</p><p> </p><p>two</p>")
     assert [(b.ordinal, b.text) for b in blocks] == [(0, "one"), (1, "two")]
+
+
+def test_str_page_extracts_like_its_utf8_bytes():
+    """extract() takes str as well as bytes: a str page dispatches like
+    its UTF-8 encoding (markup, prose, and JSON Lines, the one text leg
+    whose gate reads str)."""
+    pages = [
+        "<html><body><h1>Str page title</h1><p>A markup page passed as str "
+        "with enough words in it for the scorer to keep.</p></body></html>",
+        "Plain prose page with no markup at all, just sentences long enough "
+        "for the density scorer to keep them.",
+        '{"title": "A record", "text": "First JSON Lines record with enough prose to keep."}\n'
+        '{"title": "B", "text": "Second record body prose that is long enough to keep."}\n',
+    ]
+    for s in pages:
+        r = extract(s)
+        assert r.text
+        assert r == extract(s.encode())

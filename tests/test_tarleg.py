@@ -96,7 +96,7 @@ def test_member_cap_bounds_the_walk():
 
 def test_zlib_forged_prose_member_dispatches_as_is():
     """A text member starting 'x^' passes the forgeable 2-byte zlib
-    gate but is not a zlib stream: the core._run contract says
+    gate but is not a zlib stream: the core._unwrap contract says
     'never was an envelope — dispatch as-is', and the tar walk must
     honor it rather than dropping the member."""
     prose = b"x^2 + y^2 = z^2 holds for the planted pythagorean text here."

@@ -51,9 +51,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _DOC_TITLE_RE = re.compile(r"^=\s+(\S.*)$")
 _SECTION_RE = re.compile(r"^(={2,6})\s+(\S.*)$")
@@ -88,10 +87,9 @@ def is_adoc(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, a ``= Title`` FIRST significant line, >= 2 further
     markers."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     first = next((ln for ln in text.split("\n") if ln.strip()), "")
     if not _DOC_TITLE_RE.match(first.strip()):
         return False

@@ -40,9 +40,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _ENTRY_RE = re.compile(r"(?m)^@(\w+)\s*\{")
 _FIELD_EV_RE = re.compile(r"\w+\s*=\s*[{\"0-9]")
@@ -76,10 +75,9 @@ def is_bibtex(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, >= 2 @type{ entry heads, >= 1 field
     assignment."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

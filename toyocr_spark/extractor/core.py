@@ -147,7 +147,7 @@ def _is_zlib(data) -> bool:
     gzip/bz2/xz the zlib gate alone never condemns a page: acceptance
     additionally requires the full adler32-verified decode in
     _unzlib, and a gate-passing-but-invalid stream falls back to
-    prose dispatch (see the loop in _run)."""
+    prose dispatch (see _unwrap)."""
     if len(data) < 2:
         return False
     cmf, flg = data[0], data[1]
@@ -208,230 +208,131 @@ class ExtractResult:
 _EMPTY = ExtractResult("", (), 0, 0, False)
 
 
+# The dispatch order is the contract: the first row whose gate claims the
+# page tokenizes it. A `fall_through` row whose tokenizer returns no
+# blocks (mangled XML, or markup merely quoting the root tag) hands the
+# page on to the next row instead of zeroing it. Rows hold NAMES, looked
+# up in this module's globals on every call, so a rebound global (a
+# timer wrapped around a leg) is the function that runs.
+_LEGS = (
+    ("is_pdf", "tokenize_pdf", False),
+    ("is_ps", "tokenize_ps", False),  # PDF's ancestor grammar
+    ("is_rtf", "tokenize_rtf", False),
+    ("is_docx", "tokenize_docx", False),
+    ("is_xlsx", "tokenize_xlsx", False),
+    ("is_pptx", "tokenize_pptx", False),
+    ("is_epub", "tokenize_epub", False),
+    ("is_odt", "tokenize_odt", False),
+    ("is_ods", "tokenize_ods", False),
+    ("is_odp", "tokenize_odp", False),
+    ("is_doc", "tokenize_doc", False),
+    ("is_xls", "tokenize_xls", False),
+    ("is_ppt", "tokenize_ppt", False),
+    # after every specific zip container (OOXML trio, EPUB, ODF trio):
+    # what remains with PK magic is a generic bundle, walked like tar
+    ("is_zip_bundle", "tokenize_zip", False),
+    ("is_mhtml", "tokenize_mhtml", False),
+    # the mail container before the single message: an asctime postmark
+    # first line has no colon, so no header-shaped gate can claim it
+    ("is_mbox", "tokenize_mbox", False),
+    # after MHTML: multipart/related outranks mail
+    ("is_eml", "tokenize_eml", False),
+    ("is_tar", "tokenize_tar", False),
+    ("is_mobi", "tokenize_mobi", False),  # 'BOOKMOBI' at offset 60
+    ("is_ics", "tokenize_ics", False),  # mandated BEGIN:VCALENDAR line
+    # the '<'-led XML family, each gate anchored on its root element
+    ("is_fb2", "tokenize_fb2", True),
+    ("is_docbook", "tokenize_docbook", True),
+    ("is_ttml", "tokenize_ttml", True),
+    # HTML fast path: every gate below rejects a '<' first significant
+    # byte, so a markup-led page (the dominant crawl case) skips their
+    # 4 KB head decodes. BOM-led pages keep the full chain.
+    ("_markup_led", "tokenize", False),
+    # near-magic sniffs outrank the no-magic structural ones below
+    ("is_subtitle", "tokenize_subtitles", False),  # WEBVTT / SRT opener
+    ("is_man", "tokenize_man", False),  # mandated .TH
+    ("is_mdoc", "tokenize_mdoc", False),  # .Dd, never in man(7)
+    ("is_ms", "tokenize_ms", False),  # .TL, never in man or mdoc
+    # '{'-led JSON: a notebook's markdown cells must never reach the
+    # markdown leg, and a notebook is never read as JSON Lines
+    ("is_ipynb", "tokenize_ipynb", False),
+    ("is_ndjson", "tokenize_ndjson", False),
+    # no-magic structural sniffs, each anchored on a construct that
+    # markdown, CSV and prose do not carry, so they outrank those two
+    ("is_latex", "tokenize_latex", False),  # \documentclass first line
+    ("is_adoc", "tokenize_adoc", False),  # '= Title' first line
+    ("is_org", "tokenize_org", False),  # '#+KEYWORD:' lines
+    ("is_texinfo", "tokenize_texinfo", False),  # '\input texinfo'
+    ("is_bibtex", "tokenize_bibtex", False),  # '@type{key,' heads
+    ("is_po", "tokenize_po", False),  # paired msgid/msgstr
+    ("is_gemtext", "tokenize_gemtext", False),  # '=>' link lines
+    ("is_wikitext", "tokenize_wikitext", False),  # == Heading == + links
+    # an rst-exclusive marker keeps setext-Markdown READMEs out
+    ("is_rst", "tokenize_rst", False),
+    # markdown and CSV have no magic, so they come last; a pipe table
+    # inside a README stays markdown
+    ("is_markdown", "tokenize_markdown", False),
+    ("is_csv", "tokenize_csv", False),
+)
+
+
+def _markup_led(html: bytes | str) -> bool:
+    """True when the first significant character is '<'."""
+    if isinstance(html, str):
+        return html[:256].lstrip()[:1] == "<"
+    return bytes(html[:256]).lstrip()[:1] == b"<"
+
+
 def dispatch_blocks(html: bytes | str) -> list:
-    """Magic-byte format dispatch (the north rule's "HTML boilerplate
-    strip, PDF/layout parse"): PDFs tokenize via the content-stream
-    machine, OOXML containers via the OPC walks (WordprocessingML
-    .docx, SpreadsheetML .xlsx); everything downstream — XY-cut,
-    scoring, islands — is shared. Existing HTML behavior is untouched
-    (no HTML page starts with %PDF- or PK\\x03\\x04), so the frozen
-    kernel's byte-identity contract holds. Shared by _run and the tar
-    archive walk (each member re-enters the same chain once)."""
-    if is_pdf(html):
-        return tokenize_pdf(html)
-    if is_ps(html):
-        # PDF's ancestor grammar, same positioned-block product
-        return tokenize_ps(html)
-    if is_rtf(html):
-        return tokenize_rtf(html)
-    if is_docx(html):
-        return tokenize_docx(html)
-    if is_xlsx(html):
-        return tokenize_xlsx(html)
-    if is_pptx(html):
-        return tokenize_pptx(html)
-    if is_epub(html):
-        return tokenize_epub(html)
-    if is_odt(html):
-        return tokenize_odt(html)
-    if is_ods(html):
-        return tokenize_ods(html)
-    if is_odp(html):
-        return tokenize_odp(html)
-    if is_doc(html):
-        return tokenize_doc(html)
-    if is_xls(html):
-        return tokenize_xls(html)
-    if is_ppt(html):
-        return tokenize_ppt(html)
-    if is_zip_bundle(html):
-        # AFTER every specific zip container (OOXML trio, EPUB, ODF
-        # trio): what remains with PK magic is a generic bundle (site
-        # export, dataset dump) — walked like tar, never lossy-decoded
-        return tokenize_zip(html)
-    if is_mhtml(html):
-        return tokenize_mhtml(html)
-    if is_mbox(html):
-        # the mail family's CONTAINER, before the single message: an
-        # asctime postmark first line (no colon — structurally
-        # disjoint from every header-shaped gate) + mail headers
-        return tokenize_mbox(html)
-    if is_eml(html):
-        # after MHTML (multipart/related outranks mail): header-shaped
-        # first line + line-anchored From/Subject/Date headers — the
-        # block prose cannot fake
-        return tokenize_eml(html)
-    if is_tar(html):
-        return tokenize_tar(html)
-    if is_mobi(html):
-        # PDB type/creator 'BOOKMOBI' at offset 60 is a true 8-byte
-        # magic (Kindle-era e-books, the twenty-eighth leg): container
-        # strip + PalmDOC decompress, then the HTML re-enters the
-        # shared tokenizer
-        return tokenize_mobi(html)
-    if is_ics(html):
-        # near-magic: RFC 5545 mandates BEGIN:VCALENDAR as the first
-        # line — prose cannot start with it (the WEBVTT rule)
-        return tokenize_ics(html)
-    if is_fb2(html):
-        # a FictionBook ROOT element (after prologue/comments) is a
-        # de-facto magic for the '<'-led family: no other dispatched
-        # format names its root that (e-book XML, the twenty-seventh
-        # leg). If the gate matched but nothing tokenized (mangled
-        # XML, or markup merely leading with the quoted tag), fall
-        # through to the HTML tokenizer rather than zero the page.
-        fb2 = tokenize_fb2(html)
-        if fb2:
-            return fb2
-    if is_docbook(html):
-        # root-anchored '<'-led gate (the FictionBook rule): the root
-        # element must BE a DocBook division with DocBook evidence in
-        # the head; malformed XML tokenizes empty and falls through
-        # to the HTML tokenizer rather than zeroing the page
-        db = tokenize_docbook(html)
-        if db:
-            return db
-    if is_ttml(html):
-        # namespace-anchored <tt> root (the fb2/docbook rule):
-        # broadcast caption XML; malformed XML tokenizes empty and
-        # falls through to the HTML tokenizer
-        tt = tokenize_ttml(html)
-        if tt:
-            return tt
-    lead = bytes(html[:256]).lstrip()
-    if lead[:1] == b"<":
-        # HTML fast path (a pure short-circuit, not a behavior
-        # change): every remaining gate rejects a '<' first
-        # significant byte — subtitles demand WEBVTT/a digit line,
-        # ipynb/ndjson demand '{', latex/texinfo a backslash line,
-        # man/mdoc/org/wikitext/rst/adoc/markdown/csv all test and
-        # reject '<' explicitly — so a markup-led page (the dominant
-        # crawl case) skips ~14 gates' 4 KB head decodes and goes
-        # straight to the HTML tokenizer. BOM-led pages keep the
-        # full chain (the gates see the BOM differently).
-        return tokenize(html)
-    if is_subtitle(html):
-        # near-magic sniffs: WebVTT's mandated "WEBVTT" header is a
-        # de-facto magic; SRT's counter+timing two-line opener is
-        # structure prose cannot fake — both outrank the weaker
-        # structural sniffs below
-        return tokenize_subtitles(html)
-    if is_man(html):
-        # near-magic: man(7) mandates .TH as the first macro, and the
-        # line-anchored dot-macro surface is structure prose cannot
-        # fake — outranks every no-magic structural sniff below
-        return tokenize_man(html)
-    if is_mdoc(html):
-        # the BSD half of the manual-page family: mdoc mandates the
-        # .Dd prologue macro man(7) pages never carry, so the two
-        # near-magic gates are disjoint by construction
-        return tokenize_mdoc(html)
-    if is_ms(html):
-        # the troff trio's third mandated macro: papers lead with
-        # .TL, which .TH-gated man and .Dd-gated mdoc never carry
-        return tokenize_ms(html)
-    if is_ipynb(html):
-        # JSON-structured: '{'-led head carrying the nbformat keys.
-        # Runs before markdown so a notebook whose markdown cells
-        # hold ATX headings can never leak to the markdown leg.
-        return tokenize_ipynb(html)
-    if is_ndjson(html):
-        # JSON-Lines dataset shards ('{'-led first line = complete
-        # object with a text-ish string field) — after ipynb so a
-        # notebook never leaks, before every non-'{' structural sniff
-        # (the twenty-ninth leg)
-        return tokenize_ndjson(html)
-    if is_latex(html):
-        # first of the no-magic structural sniffs: the gate demands a
-        # \documentclass-shaped first significant line, which no
-        # markdown/CSV/prose page has, so it outranks both. ArXiv
-        # .tex-in-.tar bundles reach here via the tar member walk.
-        return tokenize_latex(html)
-    if is_adoc(html):
-        # second no-magic structural sniff, anchored at the FIRST
-        # significant line ('= Title', the AsciiDoc doc-header
-        # convention no other dispatched format leads with) plus
-        # section/attribute/delimiter evidence
-        return tokenize_adoc(html)
-    if is_org(html):
-        # anchored no-magic sniff: line-anchored '#+KEYWORD:' lines
-        # ('#'-led but never ATX — '#'+non-space fails markdown's
-        # heading gate) are org-exclusive, so cross-claims are
-        # impossible in either direction
-        return tokenize_org(html)
-    if is_texinfo(html):
-        # de-facto magic: every conforming Texinfo file begins with
-        # the '\input texinfo' bootstrap line (disjoint from latex's
-        # \documentclass-led gate)
-        return tokenize_texinfo(html)
-    if is_bibtex(html):
-        # line-anchored @type{key, entry heads are bib-exclusive;
-        # titles + abstracts are the prose a corpus wants
-        return tokenize_bibtex(html)
-    if is_po(html):
-        # paired line-anchored msgid/msgstr keywords are PO-exclusive;
-        # translated, non-fuzzy msgstr prose is the content
-        return tokenize_po(html)
-    if is_gemtext(html):
-        # '=>' link lines are gemtext-exclusive (fence-aware count),
-        # so the capsule gate outranks the weaker heading sniffs
-        return tokenize_gemtext(html)
-    if is_wikitext(html):
-        # third no-magic structural sniff: == Heading == lines plus
-        # wikilink/template evidence — constructs neither markdown
-        # (ATX-gated) nor prose carries, so it outranks both
-        return tokenize_wikitext(html)
-    if is_rst(html):
-        # fourth no-magic structural sniff: an underlined section title
-        # plus at least one rst-EXCLUSIVE marker (directive / field
-        # list / '::' literal intro / `x <u>`_ reference) — the
-        # exclusivity clause keeps setext-Markdown READMEs out, so
-        # this may safely outrank the ATX-gated markdown sniff
-        return tokenize_rst(html)
-    if is_markdown(html):
-        # LAST gates before the HTML fallback: markdown and CSV have
-        # no magic, so every tagged/binary format wins first and the
-        # structural-evidence sniffs (extractor/markdown.py,
-        # extractor/csvleg.py) only claim pages that previously fell
-        # through to the one-big-text-block path. Markdown outranks
-        # CSV: a pipe table inside a README stays markdown.
-        return tokenize_markdown(html)
-    if is_csv(html):
-        return tokenize_csv(html)
+    """Format dispatch (the north rule's "HTML boilerplate strip,
+    PDF/layout parse"): the first `_LEGS` row whose gate claims the page
+    tokenizes it, and a page no row claims is HTML. Everything
+    downstream (XY-cut, scoring, islands) is shared. Shared by _run and
+    the tar/zip member walks (each member re-enters once)."""
+    names = globals()
+    for gate, tokenizer, fall_through in _LEGS:
+        if names[gate](html):
+            blocks = names[tokenizer](html)
+            if blocks or not fall_through:
+                return blocks
     return tokenize(html)
+
+
+def _unwrap(data, depth: int) -> tuple[bytes | str, bool] | None:
+    """Strip up to `depth` transfer envelopes (any mix of gzip/bz2/xz/
+    zlib): crawls carry bodies stored still compressed. Returns
+    (payload, truncated), or None for a corrupt envelope. gzip/bz2/xz
+    magics are unforgeable, so their failed decode is a corrupt
+    envelope; the 2-byte zlib gate is forgeable by prose, so its failed
+    decode means "never was an envelope" and the bytes pass through as
+    they are. Stops early on an empty payload. `_envelope_codec` and
+    `_unzlib` are read from the module globals at call time (see
+    `_LEGS`)."""
+    truncated = False
+    while depth and isinstance(data, (bytes, bytearray)):
+        codec = _envelope_codec(data)
+        if codec is None:
+            break
+        unz = codec(bytes(data))
+        if unz is None:
+            if codec is _unzlib:
+                break
+            return None
+        data, t = unz
+        truncated = truncated or t
+        depth -= 1
+        if len(data) == 0:
+            break
+    return data, truncated
 
 
 def _run(html: bytes | str | None, selector) -> ExtractResult:
     if html is None or len(html) == 0:
         return _EMPTY
-    truncated = False
-    # transfer-encoding residue: crawls carry bodies stored still
-    # compressed (Content-Encoding survived the capture, or the page
-    # came out of a bz2/xz dump shard). Strip up to two envelopes —
-    # any mix of gzip/bz2/xz — before dispatch; every inflate is
-    # output-bounded above, malformed streams yield the empty result
-    # deterministically (the container quiet-skip contract), and no
-    # real format starts with any of the three magics so existing
-    # byte-identity is untouched.
-    envelopes = 0
-    while isinstance(html, (bytes, bytearray)) and envelopes < 2:
-        codec = _envelope_codec(html)
-        if codec is None:
-            break
-        unz = codec(bytes(html))
-        if unz is None:
-            # gzip/bz2/xz magics are unforgeable, so a failed decode
-            # means a genuinely corrupt envelope: quiet-skip. The
-            # 2-byte zlib gate is forgeable by prose, so its failure
-            # means "never was an envelope": dispatch the bytes as-is.
-            if codec is _unzlib:
-                break
-            return _EMPTY
-        html, t = unz
-        truncated = truncated or t
-        envelopes += 1
-        if len(html) == 0:
-            return _EMPTY
+    unwrapped = _unwrap(html, 2)
+    if unwrapped is None or len(unwrapped[0]) == 0:
+        return _EMPTY  # the container quiet-skip contract
+    html, truncated = unwrapped
     if len(html) > MAX_HTML_BYTES:
         html = html[:MAX_HTML_BYTES]
         truncated = True

@@ -38,9 +38,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _LINK_RE = re.compile(r"^=>\s*(\S+)(?:\s+(.*))?$")
 _HEADING_RE = re.compile(r"^(#{1,3})\s+(\S.*)$")
@@ -55,10 +54,9 @@ _EV_PRE = re.compile(r"(?m)^```")
 def is_gemtext(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, >= 2 `=>` link lines, >= 3 markers."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

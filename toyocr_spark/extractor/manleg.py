@@ -41,9 +41,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _TH_RE = re.compile(r"(?m)^\.TH\s+\S+")
 _MACRO_RE = re.compile(r"(?m)^\.(SH|SS|PP|LP|P|TP|IP|B|I|BR|RB|BI|IB|RI|IR|nf|fi)(\s|$)")
@@ -72,9 +71,9 @@ _PARA_MACROS = {"PP", "LP", "P"}
 def is_man(data: bytes | str | None) -> bool:
     """Near-magic gate (see module docstring): strict-UTF-8 head, a
     line-anchored `.TH name`, >= 2 further man-macro lines."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    head = text_head(data)
+    if head is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES]).decode("utf-8", errors="replace")
     if head.lstrip()[:1] == "<":
         # a markup page QUOTING man source (a <pre> man mirror) stays
         # markup — the wikitext/rst first-byte rule

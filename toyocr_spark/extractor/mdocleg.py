@@ -46,9 +46,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _DD_RE = re.compile(r"(?m)^\.Dd\s+\S")
 _MACRO_RE = re.compile(r"(?m)^\.(Sh|Ss|Nm|Nd|Os|Dt|Pp|Bl|It|El|Bd|Ed|Fl|Ar|Op|Xr)(\s|$)")
@@ -66,9 +65,9 @@ _PUNCT = {".", ",", ";", ":", "?", "!", ")", "(", "[", "]"}
 def is_mdoc(data: bytes | str | None) -> bool:
     """Prologue gate (see module docstring): strict-UTF-8 head, a
     line-anchored `.Dd `, >= 2 further mdoc macro lines."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    head = text_head(data)
+    if head is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES]).decode("utf-8", errors="replace")
     if head.lstrip()[:1] == "<":
         # a markup page QUOTING mdoc source stays markup — the
         # wikitext/rst first-byte rule

@@ -49,9 +49,8 @@ from toyocr_spark.extractor.manleg import (
     _split_args,
     _unescape,
 )
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _TL_RE = re.compile(r"(?m)^\.TL(\s|$)")
 _MS_MACRO_RE = re.compile(
@@ -63,9 +62,9 @@ def is_ms(data: bytes | str | None) -> bool:
     """Mandated-macro gate (see module docstring): strict-UTF-8 head,
     non-'<' first byte, a line-anchored .TL, >= 2 further ms macro
     lines."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    head = text_head(data)
+    if head is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES]).decode("utf-8", errors="replace")
     if head.lstrip()[:1] == "<":
         return False
     if not _TL_RE.search(head):

@@ -48,9 +48,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _KEYWORD_RE = re.compile(r"^#\+(\w+):\s*(.*)$")
 _BEGIN_RE = re.compile(r"^#\+BEGIN_(\w+)", re.I)
@@ -80,10 +79,9 @@ def is_org(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, >= 1 ``#+KEYWORD:``/``#+BEGIN_`` anchor
     line, >= 3 markers total."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

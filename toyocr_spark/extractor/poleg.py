@@ -44,9 +44,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 _MSGID_RE = re.compile(r'(?m)^msgid\s+"')
 _MSGSTR_RE = re.compile(r'(?m)^msgstr(\[\d+\])?\s+"')
@@ -57,10 +56,9 @@ _ESCAPES = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\"}
 def is_po(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, >= 2 msgid/msgstr pairs."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

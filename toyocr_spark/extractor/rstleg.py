@@ -50,9 +50,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 
 # docutils adornment characters (docs overwhelmingly use =-~^"'`#*+.)
 _ADORN = "=-`:'\"~^_*+#<>!$%&(),./;?@[\\]{|}"
@@ -105,10 +104,9 @@ def is_rst(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, >= 1 underlined title, >= 3 markers
     total with >= 1 rst-exclusive marker."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

@@ -177,21 +177,15 @@ def _members(data: bytes):
                 continue
             if is_tar(payload) or _nested_generic_zip(payload):
                 continue  # no generic-walker recursion (depth 1)
-            codec = core._envelope_codec(payload)
-            if codec is not None:
-                unz = codec(payload)
-                if unz is None:
-                    # the core._run contract: gzip/bz2/xz magics are
-                    # unforgeable, so a failed decode is a corrupt
-                    # envelope (skip); the 2-byte zlib gate is prose-
-                    # forgeable ('x^ ...'), so its failure means the
-                    # member never was an envelope — dispatch as-is
-                    if codec is core._unzlib:
-                        yield payload
-                    continue
-                payload = unz[0]
-                if is_tar(payload) or _nested_generic_zip(payload):
-                    continue
+            # the core._unwrap contract: a corrupt gzip/bz2/xz member
+            # is skipped, a prose member forging the zlib gate
+            # ('x^ ...') dispatches as-is
+            unwrapped = core._unwrap(payload, 1)
+            if unwrapped is None:
+                continue
+            payload = unwrapped[0]
+            if is_tar(payload) or _nested_generic_zip(payload):
+                continue
             yield payload
     finally:
         tf.close()

@@ -49,9 +49,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 MAX_BRACE_ROUNDS = 12  # innermost-out @cmd{...} resolution bound
 
 _BOOTSTRAP_RE = re.compile(r"^\\input\s+texinfo\b")
@@ -112,9 +111,9 @@ def is_texinfo(data: bytes | str | None) -> bool:
     """De-facto-magic gate (see module docstring): strict-UTF-8 head,
     ``\\input texinfo`` as the first significant line, >= 2 further
     ``@``-command lines."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    head = text_head(data)
+    if head is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES]).decode("utf-8", errors="replace")
     first = next((ln for ln in head.split("\n") if ln.strip()), "")
     if not _BOOTSTRAP_RE.match(first.strip()):
         return False

@@ -62,6 +62,17 @@ def utf8_textish(data: bytes, probe_bytes: int = 4096) -> bool:
         except UnicodeDecodeError:
             continue
     return False
+
+
+def text_head(data: bytes | str | None) -> str | None:
+    """The first 4 KB of a text page, replace-decoded: what the
+    structural text-format gates sniff. None unless `data` is bytes
+    that pass `utf8_textish`."""
+    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+        return None
+    return bytes(data[:4096]).decode("utf-8", errors="replace")
+
+
 _TAG_SPLIT_RE = re.compile(r"(<[^>]*>)")
 # style="position:absolute;left:10px;top:20px;width:100px;height:30px"
 _POS_RE = re.compile(

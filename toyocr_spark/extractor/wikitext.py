@@ -44,9 +44,8 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, text_head
 
-_SNIFF_BYTES = 4096
 MAX_TEMPLATE_ROUNDS = 24  # innermost-out {{...}} elimination bound
 
 # heading CONTENT must contain a non-'=' char: a bare run of '='
@@ -74,10 +73,9 @@ _RULE_RE = re.compile(r"^-{4,}\s*$")
 def is_wikitext(data: bytes | str | None) -> bool:
     """Structural-evidence gate (see module docstring): strict-UTF-8
     head, non-'<' first byte, a == Heading == line, >= 3 markers."""
-    if not isinstance(data, (bytes, bytearray)) or not utf8_textish(data):
+    text = text_head(data)
+    if text is None:
         return False
-    head = bytes(data[:_SNIFF_BYTES])
-    text = head.decode("utf-8", errors="replace")
     stripped = text.lstrip()
     if not stripped or stripped[0] == "<":
         return False

@@ -108,16 +108,12 @@ def _members(data: bytes):
                 continue
             if is_tar(payload) or bytes(payload[:4]) == _ZIP_MAGIC:
                 continue  # no generic-walker recursion (depth 1)
-            codec = core._envelope_codec(payload)
-            if codec is not None:
-                unz = codec(payload)
-                if unz is None:
-                    if codec is core._unzlib:
-                        yield payload  # prose-forgeable gate: not an envelope
-                    continue
-                payload = unz[0]
-                if is_tar(payload) or bytes(payload[:4]) == _ZIP_MAGIC:
-                    continue
+            unwrapped = core._unwrap(payload, 1)
+            if unwrapped is None:
+                continue  # corrupt envelope
+            payload = unwrapped[0]
+            if is_tar(payload) or bytes(payload[:4]) == _ZIP_MAGIC:
+                continue
             yield payload
     finally:
         zf.close()
