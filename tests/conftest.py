@@ -103,3 +103,24 @@ def leg_pages() -> dict[str, bytes]:
         "tokenize_markdown": genmd.build_md(title, paras),
         "tokenize_csv": gencsv.build_csv([title, ""], [[p, ""] for p in paras]),
     }
+
+
+@pytest.fixture(scope="session")
+def broken_block():
+    """A function returning the first block of a list that breaks the
+    block contract ``tokenizer.make_block`` owns (text collapsed and
+    non-empty, ``n_chars == len(text)``, ``0 <= link_chars <=
+    n_chars``), or None."""
+
+    def first_broken(blocks):
+        for b in blocks:
+            if not (
+                b.text
+                and b.text == " ".join(b.text.split())
+                and b.n_chars == len(b.text)
+                and 0 <= b.link_chars <= b.n_chars
+            ):
+                return b
+        return None
+
+    return first_broken

@@ -4,7 +4,7 @@ Rows name their gate and tokenizer as strings looked up in ``core`` at
 call time, so a misspelt or dropped name surfaces only as a KeyError
 out of ``extract()`` on the pages that reach that row: these tests pin
 the names, and route one fixture document per leg to its own
-tokenizer."""
+tokenizer, whose blocks must keep the block contract."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ def test_table_covers_every_tokenizer_once():
     assert _tokenizer_names() == set(rows) | {"tokenize"}
 
 
-def test_each_leg_page_lands_on_its_own_tokenizer(leg_pages, monkeypatch):
+def test_each_leg_page_lands_on_its_own_tokenizer(leg_pages, broken_block, monkeypatch):
     assert set(leg_pages) == _tokenizer_names()
     calls: list[str] = []
     depth = [0]
@@ -52,3 +52,4 @@ def test_each_leg_page_lands_on_its_own_tokenizer(leg_pages, monkeypatch):
         result = core.extract(page)
         assert calls == [name], (name, calls)
         assert result.text, name
+        assert broken_block(core.dispatch_blocks(page)) is None, name

@@ -127,3 +127,38 @@ def test_position_box_defaults_and_closing_tags():
     # a closing tag never carries a box even if its token matches _POS_RE
     b = tokenize('<div>x</div style="position:absolute;left:1px;top:2px">y')
     assert all(blk.box is None for blk in b)
+
+
+def test_make_block_collapses_exactly_as_str_split():
+    """NBSP, the ideographic space and the C0 separators \\x1c-\\x1f are
+    whitespace to str.split() (unlike the ASCII-only rule of an HTML
+    parser): make_block collapses them, and nothing else. Text that
+    collapses to nothing is no block."""
+    from toyocr_spark.extractor.tokenizer import make_block
+
+    for raw, want in (
+        ("", ""),
+        ("\t\n\r \x85", ""),
+        ("\xa0\u3000\x1c\x1d\x1e\x1f", ""),
+        ("a\xa0b", "a b"),
+        ("a\u3000\u3000b", "a b"),
+        ("\x1ca\x1c\x1db\x1f", "a b"),
+        ("  a \n\t b  ", "a b"),
+        ("a\u200bb", "a\u200bb"),  # zero-width space is not whitespace
+    ):
+        assert want == " ".join(raw.split()), repr(raw)
+        b = make_block(raw, ("p",), "text", 3, 2)
+        if not want:
+            assert b is None, repr(raw)
+        else:
+            assert (b.text, b.n_chars) == (want, len(want)), repr(raw)
+
+
+def test_make_block_clamps_link_chars_and_keeps_the_rest():
+    from toyocr_spark.extractor.tokenizer import make_block
+
+    b = make_block(" ab  c ", ("div", "p"), "title", 99, 4, (1, 2, 3, 4))
+    assert (b.text, b.tag_path, b.n_chars, b.link_chars) == ("ab c", ("div", "p"), 4, 4)
+    assert (b.n_inline, b.kind, b.box, b.ordinal) == (4, "title", (1, 2, 3, 4), 0)
+    assert make_block("ab", (), "text", 2).link_chars == 2
+    assert make_block("ab", (), "text", 1).link_chars == 1

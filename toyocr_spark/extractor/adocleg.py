@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _DOC_TITLE_RE = re.compile(r"^=\s+(\S.*)$")
@@ -104,18 +104,10 @@ def is_adoc(data: bytes | str | None) -> bool:
     return evidence >= 2
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline AsciiDoc to plain text, accumulating scorer
-    signals (the markdown/rst _render_inline contract)."""
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline AsciiDoc resolved to plain
+    text and its scorer signals counted (the markdown/rst
+    _render_block contract)."""
     n_inline = 0
     link_chars = 0
 
@@ -139,22 +131,7 @@ def _render_inline(raw: str) -> _Inline:
     text = _CODE_SPAN_RE.sub(_keep_inner, text)
     text = _BOLD_RE.sub(_keep_inner, text)
     text = _EM_RE.sub(_keep_inner, text)
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def tokenize_adoc(data: bytes) -> list[Block]:
@@ -172,7 +149,7 @@ def tokenize_adoc(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("adoc", "p"), "text")
+            b = _render_block(" ".join(para), ("adoc", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -198,7 +175,7 @@ def tokenize_adoc(data: bytes) -> list[Block]:
         m = _DOC_TITLE_RE.match(stripped)
         if m and not seen_title and not para:
             seen_title = True
-            b = _mk_block(m.group(1), ("adoc", "h1"), "title")
+            b = _render_block(m.group(1), ("adoc", "h1"), "title")
             if b:
                 blocks.append(b)
             # doc-header block: author/revision lines up to the first
@@ -212,7 +189,7 @@ def tokenize_adoc(data: bytes) -> list[Block]:
         m = _SECTION_RE.match(stripped)
         if m:
             flush()
-            b = _mk_block(m.group(2), ("adoc", f"h{len(m.group(1))}"), "title")
+            b = _render_block(m.group(2), ("adoc", f"h{len(m.group(1))}"), "title")
             if b:
                 blocks.append(b)
             i += 1
@@ -251,16 +228,9 @@ def tokenize_adoc(data: bytes) -> list[Block]:
                 code.append(lines[i].strip())
                 i += 1
             i += 1  # past the closing delimiter (or EOF)
-            joined = " ".join(" ".join(code).split())
-            if joined:
-                blocks.append(
-                    Block(
-                        text=joined,
-                        tag_path=("adoc", "pre"),
-                        n_chars=len(joined),
-                        kind="text",
-                    )
-                )
+            b = make_block(" ".join(code), ("adoc", "pre"), "text")
+            if b:
+                blocks.append(b)
             continue
         if _DELIM_STRUCT_RE.match(stripped):
             flush()  # example/quote/sidebar delimiter: structure only
@@ -273,7 +243,7 @@ def tokenize_adoc(data: bytes) -> list[Block]:
             continue
         if in_table and stripped.startswith("|"):
             cells = [c.strip() for c in stripped.strip("|").split("|")]
-            b = _mk_block(" ".join(c for c in cells if c), ("adoc", "tr"), "table")
+            b = _render_block(" ".join(c for c in cells if c), ("adoc", "tr"), "table")
             if b:
                 blocks.append(b)
             i += 1
@@ -281,7 +251,7 @@ def tokenize_adoc(data: bytes) -> list[Block]:
         m = _LIST_RE.match(stripped)
         if m and not para:
             flush()
-            b = _mk_block(m.group(1), ("adoc", "li"), "list")
+            b = _render_block(m.group(1), ("adoc", "li"), "list")
             if b:
                 blocks.append(b)
             i += 1

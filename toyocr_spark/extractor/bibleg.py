@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _ENTRY_RE = re.compile(r"(?m)^@(\w+)\s*\{")
@@ -255,29 +255,15 @@ def tokenize_bibtex(data: bytes) -> list[Block]:
             continue
         title = fields.get("title")
         if title:
-            t = " ".join(_delatex(title).split())
-            if t:
-                blocks.append(
-                    Block(
-                        text=t,
-                        tag_path=("bib", "title"),
-                        n_chars=len(t),
-                        kind="title",
-                    )
-                )
+            b = make_block(_delatex(title), ("bib", "title"), "title")
+            if b:
+                blocks.append(b)
         abstract = fields.get("abstract")
         if abstract:
             for para in re.split(r"\n\s*\n", abstract):
-                t = " ".join(_delatex(para).split())
-                if t:
-                    blocks.append(
-                        Block(
-                            text=t,
-                            tag_path=("bib", "abstract"),
-                            n_chars=len(t),
-                            kind="text",
-                        )
-                    )
+                b = make_block(_delatex(para), ("bib", "abstract"), "text")
+                if b:
+                    blocks.append(b)
     for k, b in enumerate(blocks):
         b.ordinal = k
     return blocks

@@ -30,7 +30,7 @@ from __future__ import annotations
 import csv
 import io
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, make_block, utf8_textish
 
 MIN_LINES = 3
 _SNIFF_LINES = 20
@@ -89,17 +89,9 @@ def tokenize_csv(data: bytes) -> list[Block]:
         for i, row in enumerate(reader):
             if i >= MAX_RECORDS:
                 break
-            joined = " ".join(" ".join(c.split()) for c in row if c.strip())
-            if not joined:
-                continue
-            blocks.append(
-                Block(
-                    text=joined,
-                    tag_path=("csv", "tr"),
-                    n_chars=len(joined),
-                    kind="title" if not blocks and i == 0 else "table",
-                )
-            )
+            b = make_block(" ".join(row), ("csv", "tr"), "title" if not blocks and i == 0 else "table")
+            if b:
+                blocks.append(b)
     except csv.Error:
         # a field over the reader's size limit (or another malformed
         # record) ends the walk: keep the records read so far

@@ -38,7 +38,7 @@ from __future__ import annotations
 import struct
 
 from toyocr_spark.extractor.cfb import CFB_MAGIC, CfbFile
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 _WORD_STREAM_UTF16 = "WordDocument".encode("utf-16-le")
 
@@ -242,26 +242,21 @@ def tokenize_doc(data: bytes) -> list[Block]:
 
     def end_block(fc_mark: int, in_table: bool) -> None:
         flush_link()
-        text = " ".join("".join(parts).split())
+        b = make_block(
+            "".join(parts),
+            ("doc", "tbl", "p") if in_table else ("doc", "p"),
+            "text",
+            sum(len(" ".join(f.split())) for f in link_frags),
+        )
         parts.clear()
-        frags, link_frags[:] = list(link_frags), []
-        if not text:
+        link_frags.clear()
+        if b is None:
             return
-        kind = "text"
         if papx is not None and stis:
             istd = papx.istd(fc_mark)
             if 0 <= istd < len(stis) and 1 <= stis[istd] <= 9:
-                kind = "title"
-        blocks.append(
-            Block(
-                text=text,
-                tag_path=("doc", "tbl", "p") if in_table else ("doc", "p"),
-                n_chars=len(text),
-                link_chars=sum(len(" ".join(f.split())) for f in frags),
-                n_inline=0,
-                kind=kind,
-            )
-        )
+                b.kind = "title"
+        blocks.append(b)
 
     try:
         for piece in pieces:

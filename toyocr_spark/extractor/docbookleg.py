@@ -52,7 +52,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 _SKIP_RE = re.compile(rb"\s+|<\?.*?\?>|<!--.*?-->|<![^>]*>", re.S)
 _ROOTS = (b"<book", b"<article", b"<chapter", b"<part", b"<set", b"<refentry")
@@ -159,17 +159,7 @@ def _para_block(el, path: tuple[str, ...], kind: str) -> Block | None:
                     link_chars += len(" ".join(child.tail.split()))
 
     walk(el, False)
-    text = " ".join("".join(parts).split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(link_chars, len(text)),
-        n_inline=n_inline,
-        kind=kind,
-    )
+    return make_block("".join(parts), path, kind, link_chars, n_inline)
 
 
 def tokenize_docbook(data: bytes | str) -> list[Block]:
@@ -214,15 +204,13 @@ def tokenize_docbook(data: bytes | str) -> list[Block]:
                 if cb is not None:
                     cells.append(cb)
         if cells:
-            joined = " ".join(c.text for c in cells)
             blocks.append(
-                Block(
-                    text=joined,
-                    tag_path=path + ("tr",),
-                    n_chars=len(joined),
-                    link_chars=sum(c.link_chars for c in cells),
-                    n_inline=sum(c.n_inline for c in cells),
-                    kind="table",
+                make_block(
+                    " ".join(c.text for c in cells),
+                    path + ("tr",),
+                    "table",
+                    sum(c.link_chars for c in cells),
+                    sum(c.n_inline for c in cells),
                 )
             )
 
@@ -238,16 +226,9 @@ def tokenize_docbook(data: bytes | str) -> list[Block]:
                 emit_title(el, depth)
                 continue
             if lc in _VERBATIM:
-                text = " ".join("".join(el.itertext()).split())
-                if text:
-                    blocks.append(
-                        Block(
-                            text=text,
-                            tag_path=path + ("pre",),
-                            n_chars=len(text),
-                            kind="text",
-                        )
-                    )
+                b = make_block("".join(el.itertext()), path + ("pre",), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if lc in ("para", "simpara"):
                 b = _para_block(el, path + ("p",), "text")

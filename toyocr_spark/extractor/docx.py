@@ -27,7 +27,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 ZIP_MAGIC = b"PK\x03\x04"
 _DOC_PART = "word/document.xml"
@@ -91,20 +91,10 @@ def _paragraph_block(p, path: tuple[str, ...]) -> Block | None:
                 walk(child)  # smartTag/ins/sdt wrappers: descend
 
     walk(p)
-    text = " ".join("".join(parts).split())
-    if not text:
-        return None
     style = p.find(f"{_W}pPr/{_W}pStyle")
     style_val = style.get(_W + "val", "") if style is not None else ""
     kind = "title" if style_val.startswith(_TITLE_STYLES) else "text"
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=link_chars,
-        n_inline=max(0, n_runs - 1),
-        kind=kind,
-    )
+    return make_block("".join(parts), path, kind, link_chars, max(0, n_runs - 1))
 
 
 _REL_NS = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, tokenize
+from toyocr_spark.extractor.tokenizer import Block, make_block, tokenize
 
 MAX_PARTS = 64
 
@@ -84,9 +84,9 @@ def _decode_subject(msg) -> str:
                 out.append(frag.decode(charset or "ascii", errors="replace"))
             else:
                 out.append(frag)
-        return " ".join("".join(out).split())
+        return "".join(out)
     except Exception:  # noqa: BLE001
-        return " ".join(str(raw).split())
+        return str(raw)
 
 
 MAX_NESTING = 8  # multipart tree depth bound: a crafted message with
@@ -153,11 +153,9 @@ def _plain_blocks(text: str) -> list[Block]:
 
     def flush() -> None:
         if para:
-            t = " ".join(" ".join(para).split())
-            if t:
-                blocks.append(
-                    Block(text=t, tag_path=("eml", "p"), n_chars=len(t), kind="text")
-                )
+            b = make_block(" ".join(para), ("eml", "p"), "text")
+            if b:
+                blocks.append(b)
             para.clear()
 
     for line in text.replace("\r\n", "\n").replace("\r", "\n").split("\n"):
@@ -188,16 +186,9 @@ def tokenize_eml(data: bytes) -> list[Block]:
     except Exception:  # noqa: BLE001
         return []
     blocks: list[Block] = []
-    subject = _decode_subject(msg)
+    subject = make_block(_decode_subject(msg), ("eml", "subject"), "title")
     if subject:
-        blocks.append(
-            Block(
-                text=subject,
-                tag_path=("eml", "subject"),
-                n_chars=len(subject),
-                kind="title",
-            )
-        )
+        blocks.append(subject)
     for part in _body_parts(msg):
         got = _decoded_payload(part)
         if got is None:

@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 # leading constructs an XML head may carry before the root element:
 # BOM / whitespace, the prologue, comments, a DOCTYPE — the gate skips
@@ -94,17 +94,7 @@ def _para_block(el, path: tuple[str, ...], kind: str) -> Block | None:
                     link_chars += len(" ".join(child.tail.split()))
 
     walk(el, False)
-    text = " ".join("".join(parts).split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=link_chars,
-        n_inline=n_inline,
-        kind=kind,
-    )
+    return make_block("".join(parts), path, kind, link_chars, n_inline)
 
 
 def tokenize_fb2(data: bytes | str) -> list[Block]:
@@ -133,15 +123,13 @@ def tokenize_fb2(data: bytes | str) -> list[Block]:
         ]
         vb = [b for b in vb if b is not None]
         if vb:
-            joined = " ".join(b.text for b in vb)
             blocks.append(
-                Block(
-                    text=joined,
-                    tag_path=path + ("stanza",),
-                    n_chars=len(joined),
-                    link_chars=sum(b.link_chars for b in vb),
-                    n_inline=sum(b.n_inline for b in vb),
-                    kind="text",
+                make_block(
+                    " ".join(b.text for b in vb),
+                    path + ("stanza",),
+                    "text",
+                    sum(b.link_chars for b in vb),
+                    sum(b.n_inline for b in vb),
                 )
             )
 

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _LINK_RE = re.compile(r"^=>\s*(\S+)(?:\s+(.*))?$")
@@ -86,21 +86,6 @@ def is_gemtext(data: bytes | str | None) -> bool:
     return evidence >= 3
 
 
-def _mk(text: str, path: tuple[str, ...], kind: str, link_chars: int = 0,
-        n_inline: int = 0) -> Block | None:
-    text = " ".join(text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(link_chars, len(text)),
-        n_inline=n_inline,
-        kind=kind,
-    )
-
-
 def tokenize_gemtext(data: bytes) -> list[Block]:
     """Parse gemtext bytes into Blocks: one per heading / text line /
     bullet / link line / preformat region, sharing the HTML leg's
@@ -113,7 +98,7 @@ def tokenize_gemtext(data: bytes) -> list[Block]:
 
     def flush_quote() -> None:
         if quote:
-            b = _mk(" ".join(quote), ("gmi", "q"), "text")
+            b = make_block(" ".join(quote), ("gmi", "q"), "text")
             if b:
                 blocks.append(b)
             quote.clear()
@@ -130,16 +115,9 @@ def tokenize_gemtext(data: bytes) -> list[Block]:
                 pre.append(lines[i].strip())
                 i += 1
             i += 1  # past the closing toggle (or EOF)
-            joined = " ".join(" ".join(pre).split())
-            if joined:
-                blocks.append(
-                    Block(
-                        text=joined,
-                        tag_path=("gmi", "pre"),
-                        n_chars=len(joined),
-                        kind="text",
-                    )
-                )
+            b = make_block(" ".join(pre), ("gmi", "pre"), "text")
+            if b:
+                blocks.append(b)
             continue
         if not stripped:
             flush_quote()
@@ -149,7 +127,7 @@ def tokenize_gemtext(data: bytes) -> list[Block]:
         if m:
             flush_quote()
             label = " ".join((m.group(2) or m.group(1)).split())
-            b = _mk(label, ("gmi", "a"), "text", link_chars=len(label), n_inline=1)
+            b = make_block(label, ("gmi", "a"), "text", link_chars=len(label), n_inline=1)
             if b:
                 blocks.append(b)
             i += 1
@@ -157,14 +135,14 @@ def tokenize_gemtext(data: bytes) -> list[Block]:
         m = _HEADING_RE.match(stripped)
         if m:
             flush_quote()
-            b = _mk(m.group(2), ("gmi", f"h{len(m.group(1))}"), "title")
+            b = make_block(m.group(2), ("gmi", f"h{len(m.group(1))}"), "title")
             if b:
                 blocks.append(b)
             i += 1
             continue
         if stripped.startswith("* "):
             flush_quote()
-            b = _mk(stripped[2:], ("gmi", "li"), "list")
+            b = make_block(stripped[2:], ("gmi", "li"), "list")
             if b:
                 blocks.append(b)
             i += 1
@@ -174,7 +152,7 @@ def tokenize_gemtext(data: bytes) -> list[Block]:
             i += 1
             continue
         flush_quote()
-        b = _mk(stripped, ("gmi", "p"), "text")
+        b = make_block(stripped, ("gmi", "p"), "text")
         if b:
             blocks.append(b)
         i += 1

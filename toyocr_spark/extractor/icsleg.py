@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 MAX_COMPONENTS = 64
 
@@ -127,28 +127,14 @@ def tokenize_ics(data: bytes) -> list[Block]:
     for _comp, props in _components(text):
         for pname, value in props:
             if pname == "SUMMARY":
-                t = " ".join(_unescape(value).split())
-                if t:
-                    blocks.append(
-                        Block(
-                            text=t,
-                            tag_path=("ics", "summary"),
-                            n_chars=len(t),
-                            kind="title",
-                        )
-                    )
+                b = make_block(_unescape(value), ("ics", "summary"), "title")
+                if b:
+                    blocks.append(b)
             elif pname == "DESCRIPTION":
                 for para in _unescape(value).split("\n"):
-                    t = " ".join(para.split())
-                    if t:
-                        blocks.append(
-                            Block(
-                                text=t,
-                                tag_path=("ics", "p"),
-                                n_chars=len(t),
-                                kind="text",
-                            )
-                        )
+                    b = make_block(para, ("ics", "p"), "text")
+                    if b:
+                        blocks.append(b)
     for i, b in enumerate(blocks):
         b.ordinal = i
     return blocks

@@ -43,7 +43,7 @@ from __future__ import annotations
 import json
 
 from toyocr_spark.extractor.markdown import markdown_links, tokenize_markdown
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, make_block, utf8_textish
 
 _SNIFF_BYTES = 4096
 _TAIL_BYTES = 1024
@@ -133,31 +133,17 @@ def tokenize_ipynb(data: bytes) -> list[Block]:
         elif ct == "code":
             # v4 stores code under `source`, v3 under `input`
             src = _source_text(cell.get("source") or cell.get("input"))
-            joined = " ".join(src.split())
-            if joined:
-                blocks.append(
-                    Block(
-                        text=joined,
-                        tag_path=("ipynb", "pre"),
-                        n_chars=len(joined),
-                        kind="text",
-                    )
-                )
+            b = make_block(src, ("ipynb", "pre"), "text")
+            if b:
+                blocks.append(b)
             outs = cell.get("outputs")
             if isinstance(outs, list):
                 for o in outs[:MAX_OUTPUTS]:
                     if not isinstance(o, dict):
                         continue
-                    t = " ".join(_output_text(o).split())
-                    if t:
-                        blocks.append(
-                            Block(
-                                text=t,
-                                tag_path=("ipynb", "out"),
-                                n_chars=len(t),
-                                kind="text",
-                            )
-                        )
+                    b = make_block(_output_text(o), ("ipynb", "out"), "text")
+                    if b:
+                        blocks.append(b)
         # raw cells: nbconvert passthrough aimed at another format —
         # structural chrome, never read (the docProps discipline)
     for k, b in enumerate(blocks):

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 # --- structural line patterns ---
 _COMMENT_RE = re.compile(r"(?<!\\)%.*")
@@ -63,7 +63,7 @@ _MATH_ENVS = frozenset(
 )
 _VERBATIM_ENVS = frozenset("verbatim verbatim* lstlisting alltt".split())
 
-# --- inline patterns (applied in _render_inline, in order) ---
+# --- inline patterns (applied in _render_block, in order) ---
 _HREF_RE = re.compile(r"\\href\s*\{([^{}]*)\}\s*\{([^{}]*)\}")
 _URL_RE = re.compile(r"\\url\s*\{([^{}]*)\}")
 _FOOTNOTE_RE = re.compile(r"\\footnote\s*\{([^{}]*)\}")
@@ -151,18 +151,9 @@ def _arg(s: str, i: int) -> tuple[str, int]:
     return s[i + 1 :], len(s)
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline LaTeX to plain text while accumulating the
-    scorer's signals: \\href/\\url text -> link chars (the <a>
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline LaTeX resolved to plain text
+    and the scorer's signals counted: \\href/\\url text -> link chars (the <a>
     analogue), every resolved construct -> one unit of markup
     weight. Escapes survive command-dropping via sentinels."""
     n_inline = 0
@@ -228,22 +219,7 @@ def _render_inline(raw: str) -> _Inline:
         .replace("\x05", "{")
         .replace("\x06", "}")
     )
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def _strip_comment(line: str) -> str:
@@ -279,7 +255,7 @@ def tokenize_latex(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("tex", "p"), "text")
+            b = _render_block(" ".join(para), ("tex", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -308,11 +284,9 @@ def tokenize_latex(data: bytes) -> list[Block]:
                     code.append(lines[i])  # raw: comments are literal here
                     i += 1
                 i += 1  # past \end{verbatim} (or EOF)
-                joined = " ".join(" ".join(code).split())
-                if joined:
-                    blocks.append(
-                        Block(text=joined, tag_path=("tex", "pre"), n_chars=len(joined), kind="text")
-                    )
+                b = make_block(" ".join(code), ("tex", "pre"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if env == "tabular":
                 flush()
@@ -334,11 +308,8 @@ def tokenize_latex(data: bytes) -> list[Block]:
                     i += 1
                 body = _RULE_RE.sub("", "\n".join(rows_src))
                 for row in re.split(r"\\\\", body):
-                    cells = [
-                        " ".join(_render_inline(c).text.split())
-                        for c in row.split("&")
-                    ]
-                    b = _mk_block(" ".join(c for c in cells if c), ("tex", "tr"), "table")
+                    cells = [b.text for c in row.split("&") if (b := _render_block(c, (), "table"))]
+                    b = _render_block(" ".join(cells), ("tex", "tr"), "table")
                     if b:
                         blocks.append(b)
                 continue
@@ -355,11 +326,9 @@ def tokenize_latex(data: bytes) -> list[Block]:
                         break
                     math.append(ln)
                     i += 1
-                joined = " ".join(_LABEL_RE.sub("", " ".join(math)).split())
-                if joined:
-                    blocks.append(
-                        Block(text=joined, tag_path=("tex", "eq"), n_chars=len(joined), kind="text")
-                    )
+                b = make_block(_LABEL_RE.sub("", " ".join(math)), ("tex", "eq"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if env in ("figure", "figure*"):
                 flush()
@@ -378,7 +347,7 @@ def tokenize_latex(data: bytes) -> list[Block]:
                 c = re.search(r"\\caption\s*(?=\{)", src)
                 if c is not None:
                     j = src.index("{", c.end())
-                    b = _mk_block(_arg(src, j)[0], ("tex", "figcaption"), "figure")
+                    b = _render_block(_arg(src, j)[0], ("tex", "figcaption"), "figure")
                     if b:
                         blocks.append(b)
                 continue
@@ -399,7 +368,7 @@ def tokenize_latex(data: bytes) -> list[Block]:
             flush()
             j = s.index("{", sec.end())
             head, after = _arg(s, j)
-            b = _mk_block(head, ("tex", _SEC_LEVEL[sec.group(1)]), "title")
+            b = _render_block(head, ("tex", _SEC_LEVEL[sec.group(1)]), "title")
             if b:
                 blocks.append(b)
             rest = s[after:].strip()
@@ -410,7 +379,7 @@ def tokenize_latex(data: bytes) -> list[Block]:
         if s.startswith("\\maketitle"):
             flush()
             if title_src:
-                b = _mk_block(title_src, ("tex", "h1"), "title")
+                b = _render_block(title_src, ("tex", "h1"), "title")
                 if b:
                     blocks.append(b)
             i += 1
@@ -432,7 +401,7 @@ def tokenize_latex(data: bytes) -> list[Block]:
                     break
                 item.append(nxt)
                 i += 1
-            b = _mk_block(" ".join(item), ("tex", "li"), "list")
+            b = _render_block(" ".join(item), ("tex", "li"), "list")
             if b:
                 blocks.append(b)
             continue
@@ -448,11 +417,9 @@ def tokenize_latex(data: bytes) -> list[Block]:
             if cut >= 0:
                 math[-1] = last[:cut]
             i += 1
-            joined = " ".join(_LABEL_RE.sub("", " ".join(math)).split())
-            if joined:
-                blocks.append(
-                    Block(text=joined, tag_path=("tex", "eq"), n_chars=len(joined), kind="text")
-                )
+            b = make_block(_LABEL_RE.sub("", " ".join(math)), ("tex", "eq"), "text")
+            if b:
+                blocks.append(b)
             continue
         para.append(s)
         i += 1

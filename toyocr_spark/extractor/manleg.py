@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _TH_RE = re.compile(r"(?m)^\.TH\s+\S+")
@@ -123,22 +123,6 @@ def _split_args(rest: str) -> list[str]:
     return args
 
 
-def _mk_block(
-    text: str, path: tuple[str, ...], kind: str, link_chars: int = 0, n_inline: int = 0
-) -> Block | None:
-    text = " ".join(text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(link_chars, len(text)),
-        n_inline=n_inline,
-        kind=kind,
-    )
-
-
 def tokenize_man(data: bytes) -> list[Block]:
     """Parse man(7) source into Blocks: one per section heading /
     paragraph / tagged list item / no-fill region, .TH metadata and
@@ -155,7 +139,7 @@ def tokenize_man(data: bytes) -> list[Block]:
 
     def flush(kind: str = "text", path: tuple[str, ...] = ("man", "p")) -> None:
         if para:
-            b = _mk_block(" ".join(para), path, kind, link_chars[0], ninl[0])
+            b = make_block(" ".join(para), path, kind, link_chars[0], ninl[0])
             if b:
                 blocks.append(b)
             para.clear()
@@ -182,7 +166,7 @@ def tokenize_man(data: bytes) -> list[Block]:
                 flush()
                 args = _split_args(rest)
                 title = _unescape(" ".join(args))
-                b = _mk_block(title, ("man", "sh" if macro == "SH" else "ss"), "title")
+                b = make_block(title, ("man", "sh" if macro == "SH" else "ss"), "title")
                 if b:
                     blocks.append(b)
                 i += 1
@@ -235,7 +219,7 @@ def tokenize_man(data: bytes) -> list[Block]:
                         break
                     item.append(_unescape(ln.strip(), n_inline=ninl))
                     i += 1
-                b = _mk_block(" ".join(item), ("man", "li"), "list", 0, ninl[0])
+                b = make_block(" ".join(item), ("man", "li"), "list", 0, ninl[0])
                 ninl[0] = 0
                 if b:
                     blocks.append(b)
@@ -256,16 +240,9 @@ def tokenize_man(data: bytes) -> list[Block]:
                         continue
                     code.append(_unescape(ln.strip()))
                     i += 1
-                joined = " ".join(" ".join(code).split())
-                if joined:
-                    blocks.append(
-                        Block(
-                            text=joined,
-                            tag_path=("man", "pre"),
-                            n_chars=len(joined),
-                            kind="text",
-                        )
-                    )
+                b = make_block(" ".join(code), ("man", "pre"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if macro in ("UR", "MT"):
                 pending_link = []

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import ABS_HREF_RE, Block
+from toyocr_spark.extractor.tokenizer import ABS_HREF_RE, Block, make_block
 
 _ATX_RE = re.compile(r"^(#{1,6})[ \t]+(.*?)[ \t]*#*[ \t]*$")
 _FENCE_RE = re.compile(r"^(```+|~~~+)\s*\S*\s*$")
@@ -99,18 +99,9 @@ def is_markdown(data: bytes | str | None) -> bool:
     return evidence >= 3
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline markup to plain text while accumulating the
-    scorer's signals: link text -> link chars (the <a> analogue),
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline markup resolved to plain text
+    and the scorer's signals counted: link text -> link chars (the <a> analogue),
     every resolved construct -> one unit of markup weight."""
     n_inline = 0
     link_chars = 0
@@ -152,22 +143,7 @@ def _render_inline(raw: str) -> _Inline:
     text = _EMPH_U_RE.sub(_emph, text)
     text = _EMPH_U_RE.sub(_emph, text)
     text = _HTML_TAG_RE.sub(lambda m: _count(m) or "", text)
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def tokenize_markdown(data: bytes) -> list[Block]:
@@ -191,7 +167,7 @@ def tokenize_markdown(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("md", "p"), "text")
+            b = _render_block(" ".join(para), ("md", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -213,34 +189,27 @@ def tokenize_markdown(data: bytes) -> list[Block]:
                 code.append(lines[i])
                 i += 1
             i += 1  # past the closing fence (or EOF)
-            joined = " ".join(" ".join(code).split())
-            if joined:
-                blocks.append(
-                    Block(
-                        text=joined,
-                        tag_path=("md", "pre"),
-                        n_chars=len(joined),
-                        kind="text",
-                    )
-                )
+            b = make_block(" ".join(code), ("md", "pre"), "text")
+            if b:
+                blocks.append(b)
             continue
         m = _ATX_RE.match(line)
         if m:
             flush()
-            b = _mk_block(m.group(2), ("md", f"h{len(m.group(1))}"), "title")
+            b = _render_block(m.group(2), ("md", f"h{len(m.group(1))}"), "title")
             if b:
                 blocks.append(b)
             i += 1
             continue
         if para and _SETEXT_EQ_RE.match(line):
-            b = _mk_block(" ".join(para), ("md", "h1"), "title")
+            b = _render_block(" ".join(para), ("md", "h1"), "title")
             para.clear()
             if b:
                 blocks.append(b)
             i += 1
             continue
         if para and _SETEXT_DASH_RE.match(line) and len(line.strip()) >= 2:
-            b = _mk_block(" ".join(para), ("md", "h2"), "title")
+            b = _render_block(" ".join(para), ("md", "h2"), "title")
             para.clear()
             if b:
                 blocks.append(b)
@@ -254,7 +223,7 @@ def tokenize_markdown(data: bytes) -> list[Block]:
             flush()
             if not _TABLE_SEP_RE.match(line):
                 cells = [c.strip() for c in stripped.strip("|").split("|")]
-                b = _mk_block(" ".join(c for c in cells if c), ("md", "tr"), "table")
+                b = _render_block(" ".join(c for c in cells if c), ("md", "tr"), "table")
                 if b:
                     blocks.append(b)
             i += 1
@@ -268,7 +237,7 @@ def tokenize_markdown(data: bytes) -> list[Block]:
             while i < n and lines[i].startswith(("    ", "\t")) and lines[i].strip():
                 item.append(lines[i].strip())
                 i += 1
-            b = _mk_block(" ".join(item), ("md", "li"), "list")
+            b = _render_block(" ".join(item), ("md", "li"), "list")
             if b:
                 blocks.append(b)
             continue

@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _DD_RE = re.compile(r"(?m)^\.Dd\s+\S")
@@ -202,22 +202,6 @@ def _render_macro_line(body: str, ctx: _Ctx) -> str:
     return " ".join(x for x in out if x)
 
 
-def _mk_block(
-    text: str, path: tuple[str, ...], kind: str, link_chars: int = 0, n_inline: int = 0
-) -> Block | None:
-    text = " ".join(text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(link_chars, len(text)),
-        n_inline=n_inline,
-        kind=kind,
-    )
-
-
 def tokenize_mdoc(data: bytes) -> list[Block]:
     """Parse mdoc(7) source into Blocks: one per section heading /
     paragraph / .It list item / .Bd display block, the prologue and
@@ -233,7 +217,7 @@ def tokenize_mdoc(data: bytes) -> list[Block]:
 
     def flush(path=("mdoc", "p"), kind="text") -> None:
         if para:
-            b = _mk_block(" ".join(para), path, kind, ctx.link_chars, ctx.n_inline)
+            b = make_block(" ".join(para), path, kind, ctx.link_chars, ctx.n_inline)
             if b:
                 blocks.append(b)
             para.clear()
@@ -257,7 +241,7 @@ def tokenize_mdoc(data: bytes) -> list[Block]:
             if macro in ("Sh", "Ss"):
                 flush()
                 title = " ".join(_split_args(rest))
-                b = _mk_block(title, ("mdoc", "sh" if macro == "Sh" else "ss"), "title")
+                b = make_block(title, ("mdoc", "sh" if macro == "Sh" else "ss"), "title")
                 if b:
                     blocks.append(b)
                 i += 1
@@ -298,21 +282,14 @@ def tokenize_mdoc(data: bytes) -> list[Block]:
                         continue
                     code.append(ln.strip())
                     i += 1
-                joined = " ".join(" ".join(code).split())
-                if joined:
-                    blocks.append(
-                        Block(
-                            text=joined,
-                            tag_path=("mdoc", "pre"),
-                            n_chars=len(joined),
-                            kind="text",
-                        )
-                    )
+                b = make_block(" ".join(code), ("mdoc", "pre"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if macro in ("D1", "Dl"):
                 flush()
                 rendered = _render_macro_line(rest, ctx)
-                b = _mk_block(rendered, ("mdoc", "pre"), "text", 0, ctx.n_inline)
+                b = make_block(rendered, ("mdoc", "pre"), "text", 0, ctx.n_inline)
                 ctx.n_inline = 0
                 if b:
                     blocks.append(b)

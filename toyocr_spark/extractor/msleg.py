@@ -49,7 +49,7 @@ from toyocr_spark.extractor.manleg import (
     _split_args,
     _unescape,
 )
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _TL_RE = re.compile(r"(?m)^\.TL(\s|$)")
@@ -72,21 +72,6 @@ def is_ms(data: bytes | str | None) -> bool:
     return len(_MS_MACRO_RE.findall(head)) >= 2
 
 
-def _mk_block(
-    text: str, path: tuple[str, ...], kind: str, n_inline: int = 0
-) -> Block | None:
-    text = " ".join(text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        n_inline=n_inline,
-        kind=kind,
-    )
-
-
 def tokenize_ms(data: bytes) -> list[Block]:
     """Parse ms source into Blocks: title / section headings /
     paragraphs / tagged items / displays / tbl rows, with bylines,
@@ -105,7 +90,7 @@ def tokenize_ms(data: bytes) -> list[Block]:
 
     def flush(path=("ms", "p"), kind="text") -> None:
         if para:
-            b = _mk_block(" ".join(para), path, kind, ninl[0])
+            b = make_block(" ".join(para), path, kind, 0, ninl[0])
             if b:
                 blocks.append(b)
             para.clear()
@@ -120,7 +105,7 @@ def tokenize_ms(data: bytes) -> list[Block]:
                 path = ("ms", f"h{min(nh_depth + 1, 6)}")
             else:
                 path = ("ms", "h2")
-            b = _mk_block(" ".join(heading), path, "title")
+            b = make_block(" ".join(heading), path, "title")
             if b:
                 blocks.append(b)
         heading.clear()
@@ -197,7 +182,7 @@ def tokenize_ms(data: bytes) -> list[Block]:
                 while i < n and not lines[i].startswith((".", "'")) and lines[i].strip():
                     item.append(_unescape(lines[i].strip(), n_inline=ninl))
                     i += 1
-                b = _mk_block(" ".join(item), ("ms", "li"), "list", ninl[0])
+                b = make_block(" ".join(item), ("ms", "li"), "list", 0, ninl[0])
                 ninl[0] = 0
                 if b:
                     blocks.append(b)
@@ -206,18 +191,9 @@ def tokenize_ms(data: bytes) -> list[Block]:
                 flush_heading()
                 flush()
                 body2, i = consume_until("DE", i + 1)
-                joined = " ".join(
-                    " ".join(_unescape(x.strip()) for x in body2).split()
-                )
-                if joined:
-                    blocks.append(
-                        Block(
-                            text=joined,
-                            tag_path=("ms", "pre"),
-                            n_chars=len(joined),
-                            kind="text",
-                        )
-                    )
+                b = make_block(" ".join(_unescape(x.strip()) for x in body2), ("ms", "pre"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if macro == "TS":
                 flush_heading()
@@ -235,7 +211,7 @@ def tokenize_ms(data: bytes) -> list[Block]:
                     k += 1
                 for row in body2[k:]:
                     cells = [c.strip() for c in row.split("\t")]
-                    b = _mk_block(
+                    b = make_block(
                         " ".join(c for c in cells if c and c != "_"),
                         ("ms", "tr"),
                         "table",

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import json
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 _TEXT_KEYS = ("text", "content", "body")
 MAX_RECORDS = 10_000
@@ -76,33 +76,20 @@ def tokenize_ndjson(data: bytes | str) -> list[Block]:
         if not isinstance(obj, dict):
             continue
         title = obj.get("title")
-        if isinstance(title, str) and title.strip():
-            t = " ".join(title.split())
-            blocks.append(
-                Block(
-                    text=t,
-                    tag_path=("ndjson", "title"),
-                    n_chars=len(t),
-                    kind="title",
-                )
-            )
+        if isinstance(title, str):
+            b = make_block(title, ("ndjson", "title"), "title")
+            if b:
+                blocks.append(b)
         for k in _TEXT_KEYS:
             v = obj.get(k)
             if isinstance(v, str) and v.strip():
                 # multi-paragraph record text splits on blank lines,
                 # one block per paragraph (the markdown-leg rule)
                 for para in v.split("\n\n"):
-                    p = " ".join(para.split())
-                    if p:
-                        blocks.append(
-                            Block(
-                                text=p,
-                                tag_path=("ndjson", "p"),
-                                n_chars=len(p),
-                                kind="text",
-                            )
-                        )
-                        total += len(p)
+                    b = make_block(para, ("ndjson", "p"), "text")
+                    if b:
+                        blocks.append(b)
+                        total += b.n_chars
                 break  # first text-ish key wins
     for i, b in enumerate(blocks):
         b.ordinal = i

@@ -36,7 +36,7 @@ import zipfile
 from xml.etree import ElementTree
 
 from toyocr_spark.extractor.odt import _paragraph_block
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 ZIP_MAGIC = b"PK\x03\x04"
 _MIMETYPE = b"application/vnd.oasis.opendocument.spreadsheet"
@@ -137,20 +137,16 @@ def tokenize_ods(data: bytes) -> list[Block]:
                     for _ in range(_repeat(c, "number-columns-repeated")):
                         cells.append(text)
                 # covered-table-cell: merged continuation, no content
-            text = " ".join(" ".join(cells).split())
-            if not text:
-                continue
-            blocks.append(
-                Block(
-                    text=text,
-                    tag_path=("ods", "sheet", "row"),
-                    n_chars=len(text),
-                    link_chars=link_chars,
-                    n_inline=max(0, len([c for c in cells if c]) - 1),
-                    kind="title" if first_in_sheet else "text",
-                )
+            b = make_block(
+                " ".join(cells),
+                ("ods", "sheet", "row"),
+                "title" if first_in_sheet else "text",
+                link_chars,
+                max(0, len([c for c in cells if c]) - 1),
             )
-            first_in_sheet = False
+            if b:
+                blocks.append(b)
+                first_in_sheet = False
     for i, b in enumerate(blocks):
         b.ordinal = i
     return blocks

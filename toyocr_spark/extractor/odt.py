@@ -30,7 +30,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 ZIP_MAGIC = b"PK\x03\x04"
 _MIMETYPE = b"application/vnd.oasis.opendocument.text"
@@ -101,17 +101,7 @@ def _paragraph_block(p, path: tuple[str, ...], title: bool) -> Block | None:
             emit_text(child.tail)
 
     walk(p)
-    text = " ".join("".join(parts).split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=link_chars,
-        n_inline=n_spans,
-        kind="title" if title else "text",
-    )
+    return make_block("".join(parts), path, "title" if title else "text", link_chars, n_spans)
 
 
 def tokenize_odt(data: bytes) -> list[Block]:

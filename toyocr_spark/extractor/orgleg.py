@@ -48,7 +48,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _KEYWORD_RE = re.compile(r"^#\+(\w+):\s*(.*)$")
@@ -97,18 +97,10 @@ def is_org(data: bytes | str | None) -> bool:
     return evidence >= 3
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline org to plain text, accumulating scorer signals
-    (the markdown/rst _render_inline contract)."""
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline org resolved to plain text and
+    its scorer signals counted (the markdown/rst _render_block
+    contract)."""
     n_inline = 0
     link_chars = 0
 
@@ -129,22 +121,7 @@ def _render_inline(raw: str) -> _Inline:
     n_inline += n
     text = _BOLD_RE.sub(_keep_inner, text)
     text = _VERBATIM_RE.sub(_keep_inner, text)
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def tokenize_org(data: bytes) -> list[Block]:
@@ -160,7 +137,7 @@ def tokenize_org(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("org", "p"), "text")
+            b = _render_block(" ".join(para), ("org", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -187,16 +164,9 @@ def tokenize_org(data: bytes) -> list[Block]:
                     body.append(lines[i].strip())
                     i += 1
                 if kind in ("SRC", "EXAMPLE"):
-                    joined = " ".join(" ".join(body).split())
-                    if joined:
-                        blocks.append(
-                            Block(
-                                text=joined,
-                                tag_path=("org", "pre"),
-                                n_chars=len(joined),
-                                kind="text",
-                            )
-                        )
+                    b = make_block(" ".join(body), ("org", "pre"), "text")
+                    if b:
+                        blocks.append(b)
                 # EXPORT/COMMENT bodies drop wholesale
             # QUOTE/CENTER/VERSE: structure only, inner lines parse
             continue
@@ -209,7 +179,7 @@ def tokenize_org(data: bytes) -> list[Block]:
             flush()
             if m.group(1).upper() == "TITLE":
                 # the one keyword that IS content (the eml-Subject rule)
-                b = _mk_block(m.group(2), ("org", "h1"), "title")
+                b = _render_block(m.group(2), ("org", "h1"), "title")
                 if b:
                     blocks.append(b)
             # every other keyword is export metadata: drop
@@ -233,7 +203,7 @@ def tokenize_org(data: bytes) -> list[Block]:
             depth = min(len(m.group(1)) + 1, 6)  # TITLE holds h1
             title = _TODO_RE.sub("", m.group(2))
             title = _TAGS_RE.sub("", title)
-            b = _mk_block(title, ("org", f"h{depth}"), "title")
+            b = _render_block(title, ("org", f"h{depth}"), "title")
             if b:
                 blocks.append(b)
             i += 1
@@ -242,7 +212,7 @@ def tokenize_org(data: bytes) -> list[Block]:
             flush()
             if not _TABLE_RULE_RE.match(stripped):
                 cells = [c.strip() for c in stripped.strip("|").split("|")]
-                b = _mk_block(
+                b = _render_block(
                     " ".join(c for c in cells if c), ("org", "tr"), "table"
                 )
                 if b:
@@ -252,7 +222,7 @@ def tokenize_org(data: bytes) -> list[Block]:
         m = _LIST_RE.match(stripped)
         if m:
             flush()
-            b = _mk_block(m.group(1), ("org", "li"), "list")
+            b = _render_block(m.group(1), ("org", "li"), "list")
             if b:
                 blocks.append(b)
             i += 1

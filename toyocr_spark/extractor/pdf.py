@@ -53,7 +53,7 @@ import re
 import struct
 import zlib
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 PDF_MAGIC = b"%PDF-"
 
@@ -1591,21 +1591,19 @@ def tokenize_pdf(data: bytes) -> list[Block]:
             y_min = min(ln.y for ln, _t in texts)
             y_max = max(ln.y for ln, _t in texts)
             width = max(len(t) * ln.size * _CHAR_WIDTH_EM for ln, t in texts)
-            b = Block(
-                text=text,
-                tag_path=("pdf",),
-                n_chars=len(text),
-                link_chars=0,
-                n_inline=0,
-                kind="title" if size_max >= TITLE_MIN_SIZE else "text",
-                box=(
-                    int(x0),
-                    int(y_off + page_h - (y_max + size_max)),
-                    max(1, int(width)),
-                    max(1, int(y_max - y_min + size_max)),
-                ),
+            blocks.append(
+                make_block(
+                    text,
+                    ("pdf",),
+                    "title" if size_max >= TITLE_MIN_SIZE else "text",
+                    box=(
+                        int(x0),
+                        int(y_off + page_h - (y_max + size_max)),
+                        max(1, int(width)),
+                        max(1, int(y_max - y_min + size_max)),
+                    ),
+                )
             )
-            blocks.append(b)
     for i, b in enumerate(blocks):
         b.ordinal = i
     return blocks

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 _MSGID_RE = re.compile(r'(?m)^msgid\s+"')
@@ -165,17 +165,9 @@ def tokenize_po(data: bytes) -> list[Block]:
     for e in _parse_entries(data):
         if e.msgid == "" or e.fuzzy or not e.msgstr:
             continue  # header entry / unreviewed / untranslated
-        text = " ".join(e.msgstr.split())
-        if not text:
-            continue
-        blocks.append(
-            Block(
-                text=text,
-                tag_path=("po", "msgstr"),
-                n_chars=len(text),
-                kind="text",
-            )
-        )
+        b = make_block(e.msgstr, ("po", "msgstr"), "text")
+        if b:
+            blocks.append(b)
     for k, b in enumerate(blocks):
         b.ordinal = k
     return blocks

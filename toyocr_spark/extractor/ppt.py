@@ -36,7 +36,7 @@ from __future__ import annotations
 import struct
 
 from toyocr_spark.extractor.cfb import CFB_MAGIC, CfbFile
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 _PPT_STREAM = "PowerPoint Document"
 _PPT_STREAM_UTF16 = _PPT_STREAM.encode("utf-16-le")
@@ -89,18 +89,9 @@ def _walk(stream: bytes, pos: int, end: int, out: list[Block], collect: bool) ->
                 kind = "title" if cur_type in _TITLE_TYPES else "text"
                 # \r separates paragraphs inside one text atom
                 for para in txt.split("\r"):
-                    text = " ".join(para.split())
-                    if text:
-                        out.append(
-                            Block(
-                                text=text,
-                                tag_path=("ppt", "slide", "p"),
-                                n_chars=len(text),
-                                link_chars=0,
-                                n_inline=0,
-                                kind=kind,
-                            )
-                        )
+                    b = make_block(para, ("ppt", "slide", "p"), kind)
+                    if b:
+                        out.append(b)
             cur_type = None
         pos = body + rec_len
 

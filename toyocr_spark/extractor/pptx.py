@@ -24,7 +24,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 ZIP_MAGIC = b"PK\x03\x04"
 _PRES_PART = "ppt/presentation.xml"
@@ -113,19 +113,15 @@ def tokenize_pptx(data: bytes) -> list[Block]:
                         parts_txt.append(" ")
                     elif el.tag == _A + "r":
                         n_runs += 1
-                text = " ".join("".join(parts_txt).split())
-                if not text:
-                    continue
-                blocks.append(
-                    Block(
-                        text=text,
-                        tag_path=("pptx", "sp", "p"),
-                        n_chars=len(text),
-                        link_chars=0,
-                        n_inline=max(0, n_runs - 1),
-                        kind="title" if title else "text",
-                    )
+                b = make_block(
+                    "".join(parts_txt),
+                    ("pptx", "sp", "p"),
+                    "title" if title else "text",
+                    0,
+                    max(0, n_runs - 1),
                 )
+                if b:
+                    blocks.append(b)
     for i, b in enumerate(blocks):
         b.ordinal = i
     return blocks

@@ -44,7 +44,7 @@ from toyocr_spark.extractor.pdf import (
     _DEFAULT_PAGE_H,
     _PAGE_BAND_GAP,
 )
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 MAX_RUNS = 20000
 
@@ -229,29 +229,25 @@ def tokenize_ps(data: bytes) -> list[Block]:
 
     blocks: list[Block] = []
     for g in groups:
-        text = " ".join(" ".join(t.split()) for t, *_rest in g if t.strip())
-        if not text:
-            continue
         size_max = max(s for _t, _x, _y, s, _p in g)
         x0 = min(x for _t, x, _y, _s, _p in g)
         y_min = min(y for _t, _x, y, _s, _p in g)
         y_max = max(y for _t, _x, y, _s, _p in g)
         width = max(len(t) * s * _CHAR_WIDTH_EM for t, _x, _y, s, _p in g)
         y_off = g[0][4] * band
-        blocks.append(
-            Block(
-                text=text,
-                tag_path=("ps",),
-                n_chars=len(text),
-                kind="title" if size_max >= TITLE_MIN_SIZE else "text",
-                box=(
-                    int(x0),
-                    int(y_off + page_h - (y_max + size_max)),
-                    max(1, int(width)),
-                    max(1, int(y_max - y_min + size_max)),
-                ),
-            )
+        b = make_block(
+            " ".join(t for t, *_rest in g),
+            ("ps",),
+            "title" if size_max >= TITLE_MIN_SIZE else "text",
+            box=(
+                int(x0),
+                int(y_off + page_h - (y_max + size_max)),
+                max(1, int(width)),
+                max(1, int(y_max - y_min + size_max)),
+            ),
         )
+        if b:
+            blocks.append(b)
     for idx, b in enumerate(blocks):
         b.ordinal = idx
     return blocks

@@ -50,7 +50,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 
 # docutils adornment characters (docs overwhelmingly use =-~^"'`#*+.)
@@ -125,18 +125,10 @@ def is_rst(data: bytes | str | None) -> bool:
     return evidence >= 3
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline rst to plain text, accumulating scorer signals
-    (the markdown/wikitext _render_inline contract)."""
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline rst resolved to plain text and
+    its scorer signals counted (the markdown/wikitext _render_block
+    contract)."""
     n_inline = 0
     link_chars = 0
 
@@ -159,22 +151,7 @@ def _render_inline(raw: str) -> _Inline:
     text = _EMPH_RE.sub(lambda m: m.group(2), text)
     text, n = _FOOTNOTE_RE.subn("", text)
     n_inline += n
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def _indent(line: str) -> int:
@@ -196,7 +173,7 @@ def tokenize_rst(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("rst", "p"), "text")
+            b = _render_block(" ".join(para), ("rst", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -230,7 +207,7 @@ def tokenize_rst(data: bytes) -> list[Block]:
             continue
         if in_table and stripped.startswith("|"):
             cells = [c.strip() for c in stripped.strip("|").split("|")]
-            b = _mk_block(" ".join(c for c in cells if c), ("rst", "tr"), "table")
+            b = _render_block(" ".join(c for c in cells if c), ("rst", "tr"), "table")
             if b:
                 blocks.append(b)
             i += 1
@@ -250,7 +227,7 @@ def tokenize_rst(data: bytes) -> list[Block]:
                 if ch not in adorn_order:
                     adorn_order.append(ch)
                 level = adorn_order.index(ch) + 1
-                b = _mk_block(title, ("rst", f"h{min(level, 6)}"), "title")
+                b = _render_block(title, ("rst", f"h{min(level, 6)}"), "title")
                 if b:
                     blocks.append(b)
                 i += 1
@@ -269,7 +246,7 @@ def tokenize_rst(data: bytes) -> list[Block]:
                     if ch not in adorn_order:
                         adorn_order.append(ch)
                     level = adorn_order.index(ch) + 1
-                    b = _mk_block(t, ("rst", f"h{min(level, 6)}"), "title")
+                    b = _render_block(t, ("rst", f"h{min(level, 6)}"), "title")
                     if b:
                         blocks.append(b)
                     i += 3
@@ -280,7 +257,7 @@ def tokenize_rst(data: bytes) -> list[Block]:
         m = _LIST_RE.match(stripped)
         if m and _indent(line) == 0:
             flush()
-            b = _mk_block(m.group(1), ("rst", "li"), "list")
+            b = _render_block(m.group(1), ("rst", "li"), "list")
             if b:
                 blocks.append(b)
             i += 1
@@ -298,16 +275,9 @@ def tokenize_rst(data: bytes) -> list[Block]:
             while i < n and (not lines[i].strip() or _indent(lines[i]) > 0):
                 code.append(lines[i].strip())
                 i += 1
-            joined = " ".join(" ".join(code).split())
-            if joined:
-                blocks.append(
-                    Block(
-                        text=joined,
-                        tag_path=("rst", "pre"),
-                        n_chars=len(joined),
-                        kind="text",
-                    )
-                )
+            b = make_block(" ".join(code), ("rst", "pre"), "text")
+            if b:
+                blocks.append(b)
             continue
         para.append(stripped)
         i += 1

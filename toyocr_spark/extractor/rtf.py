@@ -23,7 +23,7 @@ yields — same bytes, same blocks, never an exception."""
 
 from __future__ import annotations
 
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 RTF_MAGIC = b"{\\rtf"
 
@@ -89,18 +89,15 @@ def tokenize_rtf(data: bytes) -> list[Block]:
 
     def flush() -> None:
         nonlocal para
-        text = " ".join("".join(para.parts).split())
-        if text:
-            blocks.append(
-                Block(
-                    text=text,
-                    tag_path=("rtf", "p"),
-                    n_chars=len(text),
-                    link_chars=min(para.link_chars, len(text)),
-                    n_inline=max(0, para.n_runs - 1),
-                    kind="title" if para.fs_max >= _TITLE_FS else "text",
-                )
-            )
+        b = make_block(
+            "".join(para.parts),
+            ("rtf", "p"),
+            "title" if para.fs_max >= _TITLE_FS else "text",
+            para.link_chars,
+            max(0, para.n_runs - 1),
+        )
+        if b:
+            blocks.append(b)
         para = _Para()
 
     # group-stack states; each entry is its own dict (copy-on-push)

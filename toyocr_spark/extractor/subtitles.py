@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, utf8_textish
+from toyocr_spark.extractor.tokenizer import Block, make_block, utf8_textish
 
 MAX_CUES = 10000
 _BOM = b"\xef\xbb\xbf"
@@ -87,23 +87,6 @@ def is_subtitle(data: bytes | str | None) -> bool:
     return is_vtt(data) or is_srt(data)
 
 
-def _cue_block(text_lines: list[str], path: tuple[str, ...]) -> Block | None:
-    raw = " ".join(" ".join(text_lines).split())
-    if not raw:
-        return None
-    n_inline = len(_CUE_TAG_RE.findall(raw))
-    text = " ".join(_CUE_TAG_RE.sub("", raw).split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        n_inline=n_inline,
-        kind="text",
-    )
-
-
 def tokenize_subtitles(data: bytes) -> list[Block]:
     """Parse WebVTT/SRT bytes into Blocks: one per cue, counters/
     timings/settings/NOTE blocks dropped, inline markup resolved,
@@ -146,7 +129,8 @@ def tokenize_subtitles(data: bytes) -> list[Block]:
                 break
         if ti < 0:
             continue  # no timing: stray block, chrome
-        b = _cue_block(group[ti + 1 :], path)
+        cue = " ".join(group[ti + 1 :])
+        b = make_block(_CUE_TAG_RE.sub("", cue), path, "text", 0, len(_CUE_TAG_RE.findall(cue)))
         if b:
             blocks.append(b)
     for k, b in enumerate(blocks):

@@ -49,7 +49,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 MAX_BRACE_ROUNDS = 12  # innermost-out @cmd{...} resolution bound
 
@@ -120,18 +120,10 @@ def is_texinfo(data: bytes | str | None) -> bool:
     return len(_AT_LINE_RE.findall(head)) >= 2
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline @-commands to plain text, accumulating scorer
-    signals (the shared _render_inline contract)."""
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline @-commands resolved to plain
+    text and its scorer signals counted (the shared _render_block
+    contract)."""
     n_inline = 0
     link_chars = 0
     # escapes first, via sentinels so later passes can't re-match
@@ -155,25 +147,9 @@ def _render_inline(raw: str) -> _Inline:
         if not n:
             break
         n_inline += n
-    return _Inline(
+    return make_block(
         text.replace("\x00", "@").replace("\x01", "{").replace("\x02", "}"),
-        link_chars,
-        n_inline,
-    )
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
+        path, kind, link_chars, n_inline,
     )
 
 
@@ -192,7 +168,7 @@ def tokenize_texinfo(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("texi", "p"), "text")
+            b = _render_block(" ".join(para), ("texi", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -228,27 +204,20 @@ def tokenize_texinfo(data: bytes) -> list[Block]:
                     code.append(lines[i].strip())
                     i += 1
                 i += 1
-                joined = " ".join(" ".join(code).split())
-                if joined:
-                    blocks.append(
-                        Block(
-                            text=joined,
-                            tag_path=("texi", "pre"),
-                            n_chars=len(joined),
-                            kind="text",
-                        )
-                    )
+                b = make_block(" ".join(code), ("texi", "pre"), "text")
+                if b:
+                    blocks.append(b)
                 continue
             if cmd == "settitle":
                 flush()
-                b = _mk_block(rest, ("texi", "h1"), "title")
+                b = _render_block(rest, ("texi", "h1"), "title")
                 if b:
                     blocks.append(b)
                 i += 1
                 continue
             if cmd in _HEADINGS:
                 flush()
-                b = _mk_block(
+                b = _render_block(
                     rest, ("texi", f"h{_HEADINGS[cmd]}"), "title"
                 )
                 if b:
@@ -265,11 +234,11 @@ def tokenize_texinfo(data: bytes) -> list[Block]:
                 if in_multitable:
                     # @tab separates cells on the same @item line
                     cells = [c.strip() for c in rest.split("@tab")]
-                    b = _mk_block(
+                    b = _render_block(
                         " ".join(c for c in cells if c), ("texi", "tr"), "table"
                     )
                 else:
-                    b = _mk_block(rest, ("texi", "li"), "list")
+                    b = _render_block(rest, ("texi", "li"), "list")
                 if b:
                     blocks.append(b)
                 i += 1

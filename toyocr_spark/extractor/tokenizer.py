@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from xml.etree import ElementTree
 
 
@@ -38,7 +38,6 @@ _STRIP_RE = re.compile(
     re.S | re.I,
 )
 _TAG_NAME_RE = re.compile(r"</?\s*([a-zA-Z][a-zA-Z0-9]*)")
-_WS_RE = re.compile(r"\s+")
 _TAG_TOKEN_RE = re.compile(r"<[^>]*>")
 # absolute href target — the ONE definition shared by every
 # absolute-only mining leg (tar members, markdown inline HTML, the
@@ -104,7 +103,13 @@ BOILER_TAGS = frozenset("nav header footer aside form select option".split())
 @dataclass(slots=True)
 class Block:
     """One text block plus its scoring signals (the graft of the
-    reference's per-instance row: box+class+score -> path+density)."""
+    reference's per-instance row: box+class+score -> path+density).
+
+    Every leg emits blocks under one contract, the graft of the
+    reference's per-record map plus ``filter_empty_instances``: the
+    text is whitespace-collapsed (``" ".join(x.split())``) and never
+    empty, ``n_chars == len(text)`` and ``0 <= link_chars <= n_chars``.
+    Legs build blocks through ``make_block``, which owns that contract."""
 
     text: str = ""
     tag_path: tuple[str, ...] = ()
@@ -114,7 +119,6 @@ class Block:
     kind: str = "text"
     box: tuple[int, int, int, int] | None = None  # (x, y, w, h) if positioned
     ordinal: int = 0  # position among non-empty blocks, set by tokenize
-    _parts: list[str] = field(default_factory=list)
 
     @property
     def in_boiler(self) -> bool:
@@ -125,6 +129,25 @@ class Block:
             if len(_BOILER_CACHE) < _PATH_CACHE_CAP:
                 _BOILER_CACHE[p] = v
         return v
+
+
+def make_block(
+    text: str,
+    path: tuple[str, ...],
+    kind: str,
+    link_chars: int = 0,
+    n_inline: int = 0,
+    box: tuple[int, int, int, int] | None = None,
+) -> Block | None:
+    """The Block of raw `text` under the block contract: the text
+    collapsed, None when nothing is left, `n_chars` taken from the text
+    and `link_chars` clamped to it."""
+    # == re.sub(r"\s+", " ", text).strip() for every codepoint, ~3x faster
+    text = " ".join(text.split())
+    if not text:
+        return None
+    n = len(text)
+    return Block(text, path, n, link_chars if link_chars < n else n, n_inline, kind, box)
 
 
 # tag paths repeat heavily within and across pages of a crawl; memoizing
@@ -334,25 +357,13 @@ def tokenize(html: bytes | str) -> list[Block]:
             name, closing, box, cat = hit
             if cat == 1 or cat == 4:  # block / void-block: close the run
                 if parts:
-                    # " ".join(s.split()) == _WS_RE.sub(" ", s).strip()
-                    # for every codepoint (verified exhaustively); the
-                    # split form is ~3x faster (pure C). Most blocks
-                    # hold exactly one run — skip the concat for those.
-                    t = " ".join(
-                        (parts[0] if len(parts) == 1 else "".join(parts)).split()
+                    # most blocks hold exactly one run: skip the concat
+                    b = make_block(
+                        parts[0] if len(parts) == 1 else "".join(parts),
+                        block_path, _classify(block_path), link_chars, n_inline, cur_box,
                     )
-                    if t:
-                        blocks_append(
-                            Block(
-                                text=t,
-                                tag_path=block_path,
-                                n_chars=len(t),
-                                link_chars=link_chars,
-                                n_inline=n_inline,
-                                kind=_classify(block_path),
-                                box=cur_box,
-                            )
-                        )
+                    if b is not None:
+                        blocks_append(b)
                     parts.clear()
                     link_chars = 0
                     n_inline = 0
@@ -400,19 +411,9 @@ def tokenize(html: bytes | str) -> list[Block]:
                 if link_depth > 0:
                     link_chars += len(" ".join(piece.split()))
     if parts:  # final flush
-        t = " ".join((parts[0] if len(parts) == 1 else "".join(parts)).split())
-        if t:
-            blocks_append(
-                Block(
-                    text=t,
-                    tag_path=block_path,
-                    n_chars=len(t),
-                    link_chars=link_chars,
-                    n_inline=n_inline,
-                    kind=_classify(block_path),
-                    box=cur_box,
-                )
-            )
+        b = make_block("".join(parts), block_path, _classify(block_path), link_chars, n_inline, cur_box)
+        if b is not None:
+            blocks_append(b)
 
     for i, b in enumerate(blocks):
         b.ordinal = i

@@ -36,7 +36,7 @@ from __future__ import annotations
 import re
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 _SKIP_RE = re.compile(rb"\s+|<\?.*?\?>|<!--.*?-->|<![^>]*>", re.S)
 _TTML_NS = ("http://www.w3.org/ns/ttml", "http://www.w3.org/2006/10/ttaf1")
@@ -98,16 +98,7 @@ def _cue_block(el) -> Block | None:
                 parts.append(child.tail)
 
     walk(el)
-    text = " ".join("".join(parts).split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=("ttml", "p"),
-        n_chars=len(text),
-        n_inline=n_inline,
-        kind="text",
-    )
+    return make_block("".join(parts), ("ttml", "p"), "text", 0, n_inline)
 
 
 def tokenize_ttml(data: bytes | str) -> list[Block]:

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import re
 
-from toyocr_spark.extractor.tokenizer import Block, text_head
+from toyocr_spark.extractor.tokenizer import Block, make_block, text_head
 
 MAX_TEMPLATE_ROUNDS = 24  # innermost-out {{...}} elimination bound
 
@@ -90,18 +90,10 @@ def is_wikitext(data: bytes | str | None) -> bool:
     return evidence >= 3
 
 
-class _Inline:
-    __slots__ = ("text", "link_chars", "n_inline")
-
-    def __init__(self, text: str, link_chars: int, n_inline: int) -> None:
-        self.text = text
-        self.link_chars = link_chars
-        self.n_inline = n_inline
-
-
-def _render_inline(raw: str) -> _Inline:
-    """Resolve inline wikitext to plain text, accumulating scorer
-    signals (the markdown _render_inline contract)."""
+def _render_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
+    """`make_block` of `raw` with inline wikitext resolved to plain
+    text and its scorer signals counted (the markdown _render_block
+    contract)."""
     n_inline = 0
     link_chars = 0
     text = raw
@@ -137,22 +129,7 @@ def _render_inline(raw: str) -> _Inline:
     n_inline += n
     text, n = _HTML_TAG_RE.subn("", text)
     n_inline += n
-    return _Inline(text, link_chars, n_inline)
-
-
-def _mk_block(raw: str, path: tuple[str, ...], kind: str) -> Block | None:
-    inl = _render_inline(raw)
-    text = " ".join(inl.text.split())
-    if not text:
-        return None
-    return Block(
-        text=text,
-        tag_path=path,
-        n_chars=len(text),
-        link_chars=min(inl.link_chars, len(text)),
-        n_inline=inl.n_inline,
-        kind=kind,
-    )
+    return make_block(text, path, kind, link_chars, n_inline)
 
 
 def tokenize_wikitext(data: bytes) -> list[Block]:
@@ -173,7 +150,7 @@ def tokenize_wikitext(data: bytes) -> list[Block]:
 
     def flush() -> None:
         if para:
-            b = _mk_block(" ".join(para), ("wiki", "p"), "text")
+            b = _render_block(" ".join(para), ("wiki", "p"), "text")
             if b:
                 blocks.append(b)
             para.clear()
@@ -190,7 +167,7 @@ def tokenize_wikitext(data: bytes) -> list[Block]:
             continue
         if stripped.startswith("{{"):
             # a template OPENING at line start: if it closes on the
-            # same line it is inline chrome (_render_inline drops it
+            # same line it is inline chrome (_render_block drops it
             # anyway when part of a paragraph) — here it stands alone,
             # so drop the whole construct, multi-line or not
             flush()
@@ -217,7 +194,7 @@ def tokenize_wikitext(data: bytes) -> list[Block]:
             elif stripped.startswith(("|", "!")):
                 cells = re.split(r"\|\||!!", stripped.lstrip("|!").strip())
                 joined = " ".join(c.strip() for c in cells if c.strip())
-                b = _mk_block(joined, ("wiki", "tr"), "table")
+                b = _render_block(joined, ("wiki", "tr"), "table")
                 if b:
                     blocks.append(b)
             i += 1
@@ -225,7 +202,7 @@ def tokenize_wikitext(data: bytes) -> list[Block]:
         m = _HEADING_RE.match(stripped)
         if m:
             flush()
-            b = _mk_block(m.group(2), ("wiki", f"h{len(m.group(1))}"), "title")
+            b = _render_block(m.group(2), ("wiki", f"h{len(m.group(1))}"), "title")
             if b:
                 blocks.append(b)
             i += 1
@@ -237,7 +214,7 @@ def tokenize_wikitext(data: bytes) -> list[Block]:
         if stripped[0] in "*#;:":
             flush()
             item = stripped.lstrip("*#;:").strip()
-            b = _mk_block(item, ("wiki", "li"), "list")
+            b = _render_block(item, ("wiki", "li"), "list")
             if b:
                 blocks.append(b)
             i += 1

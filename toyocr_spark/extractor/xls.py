@@ -34,7 +34,7 @@ from __future__ import annotations
 import struct
 
 from toyocr_spark.extractor.cfb import CFB_MAGIC, CfbFile
-from toyocr_spark.extractor.tokenizer import Block
+from toyocr_spark.extractor.tokenizer import Block, make_block
 
 _WORKBOOK_UTF16 = "Workbook".encode("utf-16-le")
 
@@ -253,20 +253,16 @@ def tokenize_xls(data: bytes) -> list[Block]:
             first_in_sheet = True
             for rw in sorted(rows):
                 cells = [t for _c, t in sorted(rows[rw])]
-                text = " ".join(" ".join(cells).split())
-                if not text:
-                    continue
-                blocks.append(
-                    Block(
-                        text=text,
-                        tag_path=("xls", "sheet", "row"),
-                        n_chars=len(text),
-                        link_chars=0,
-                        n_inline=max(0, len(cells) - 1),
-                        kind="title" if first_in_sheet else "text",
-                    )
+                b = make_block(
+                    " ".join(cells),
+                    ("xls", "sheet", "row"),
+                    "title" if first_in_sheet else "text",
+                    0,
+                    max(0, len(cells) - 1),
                 )
-                first_in_sheet = False
+                if b:
+                    blocks.append(b)
+                    first_in_sheet = False
     except Exception:  # noqa: BLE001 — truncated/inconsistent: quiet-skip
         return []
     for i, b in enumerate(blocks):

@@ -26,7 +26,7 @@ import io
 import zipfile
 from xml.etree import ElementTree
 
-from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS
+from toyocr_spark.extractor.tokenizer import Block, XML_ERRORS, make_block
 
 ZIP_MAGIC = b"PK\x03\x04"
 _WORKBOOK_PART = "xl/workbook.xml"
@@ -140,20 +140,16 @@ def tokenize_xlsx(data: bytes) -> list[Block]:
             cells = [
                 _cell_text(c, shared) for c in row.iterfind(_S + "c")
             ]
-            text = " ".join(" ".join(cells).split())
-            if not text:
-                continue
-            blocks.append(
-                Block(
-                    text=text,
-                    tag_path=("xlsx", "sheet", "row"),
-                    n_chars=len(text),
-                    link_chars=0,
-                    n_inline=max(0, len([c for c in cells if c]) - 1),
-                    kind="title" if first_in_sheet else "text",
-                )
+            b = make_block(
+                " ".join(cells),
+                ("xlsx", "sheet", "row"),
+                "title" if first_in_sheet else "text",
+                0,
+                max(0, len([c for c in cells if c]) - 1),
             )
-            first_in_sheet = False
+            if b:
+                blocks.append(b)
+                first_in_sheet = False
     for i, b in enumerate(blocks):
         b.ordinal = i
     return blocks

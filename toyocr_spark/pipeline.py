@@ -1,6 +1,7 @@
 """The flagship extraction job (SURVEY.md S3.2's Spark equivalent):
 
-    pages -> salted repartition by url-hash -> mapInArrow(extract)
+    pages -> [salted repartition by url-hash, only when the input
+          has fewer than half the requested partitions] -> mapInArrow(extract)
           -> (url, extracted_text, spans) -> parquet sink
           + per-partition lineage rows + chunked commit-log resume
 
@@ -299,8 +300,9 @@ def run_extraction(
     hot: list[str] | None = None,
     strategy: str = "density",
 ) -> DataFrame:
-    """repartition (salted) + extract; the core transformation shared by
-    the one-shot and resumable drivers.
+    """extract, after a salted repartition only for an under-parallel
+    input; the core transformation shared by the one-shot and resumable
+    drivers.
 
     Shuffle elision (guide §2.4): the extraction map's cost is
     proportional to BYTES, not keys, so any byte-balanced input
