@@ -1,62 +1,51 @@
-"""The scanner's token-stream semantics, pinned against the reference
-regex form it replaced.
+"""The tokenizer's tag/text partition, pinned against the reference
+regex form it replaced, and the caches and fast paths of its walk.
 
-The tokenizer's hot loop is a str.find scanner; its contract is
-byte-equivalence with ``<[^>]*>|[^<]+`` (a tag runs from '<' to the
-FIRST '>', embedded '<' included; an unclosed '<' is skipped and the
-remainder rescans as text). This test keeps that contract checkable
-forever without git archaeology: a reference regex tokenization of the
-same source must partition it into the same tag/text runs the scanner
-acts on, across adversarial fuzz inputs.
+``tokenize`` splits the decoded source with ``_TAG_SPLIT_RE.split``
+(``(<[^>]*>)``) into alternating text and tag runs; a text run holding
+a '<' (only the last can: that '<' has no '>' after it) is split on
+'<' into separate pieces. Its contract is byte-equivalence with
+``<[^>]*>|[^<]+`` (a tag runs from '<' to the FIRST '>', embedded '<'
+included; an unclosed '<' is skipped and the remainder rescans as
+text). These tests keep that contract checkable without git
+archaeology: the reference regex tokenization of the same source must
+partition it into the same tag/text runs the kernel acts on, across
+adversarial fuzz inputs.
 """
 
 from __future__ import annotations
 
 import random
 import re
+import sys
+
+from toyocr_spark.extractor import tokenizer
 
 _REF_TOK = re.compile(r"<[^>]*>|[^<]+", re.S)
+_FIELDS = ("text", "tag_path", "n_chars", "link_chars", "n_inline", "kind", "box", "ordinal")
 
 
-def _scanner_tokens(src: str) -> list[str]:
-    """The exact scan loop from tokenizer.tokenize, emitting raw tokens."""
+def _kernel_tokens(src: str) -> list[str]:
+    """The runs ``tokenize`` acts on: ``_TAG_SPLIT_RE.split`` alternates
+    text (even elements) and tags (odd), and a text element is split
+    on '<' into its pieces, as the tokenizer's loop does."""
     out: list[str] = []
-    find = src.find
-    i, n = 0, len(src)
-    while i < n:
-        if src[i] != "<":
-            j = find("<", i)
-            if j == -1:
-                j = n
-            out.append(src[i:j])
-            i = j
-            continue
-        j = find(">", i + 1)
-        if j == -1:
-            i += 1
-            continue
-        out.append(src[i : j + 1])
-        i = j + 1
+    for i, seg in enumerate(tokenizer._TAG_SPLIT_RE.split(src)):
+        if i % 2:
+            out.append(seg)
+        else:
+            out.extend(seg.split("<"))
     return out
 
 
 def _regex_tokens(src: str) -> list[str]:
-    # the regex skips an unmatched '<' one char at a time, which splits
-    # the following text run; rejoin adjacent text runs so both forms
-    # compare at the "what the state machine consumes" granularity
-    toks = _REF_TOK.findall(src)
-    out: list[str] = []
-    for t in toks:
-        if out and t[0] != "<" and out[-1][0] != "<":
-            out[-1] += t
-        else:
-            out.append(t)
-    return out
+    return _REF_TOK.findall(src)
 
 
 def _normalize(tokens: list[str]) -> list[str]:
-    # scanner can also emit adjacent text runs (after a skipped '<');
-    # normalize identically on both sides
+    # both forms can emit adjacent text runs (after a skipped '<'): the
+    # state machine appends them to the same open block, so compare at
+    # that granularity
     out: list[str] = []
     for t in tokens:
         if not t:
@@ -68,6 +57,10 @@ def _normalize(tokens: list[str]) -> list[str]:
     return out
 
 
+def _fields(blocks) -> list[tuple]:
+    return [tuple(getattr(b, f) for f in _FIELDS) for b in blocks]
+
+
 def test_scanner_matches_regex_on_edge_shapes():
     cases = [
         "a<b", "<<p>x", "<p", "x>y", "<a<b>c", "tail<", "<>", "a < b>c",
@@ -75,7 +68,7 @@ def test_scanner_matches_regex_on_edge_shapes():
         "<p att='x>y'>z",  # '>' inside attr ends the tag (regex semantics)
     ]
     for s in cases:
-        assert _normalize(_scanner_tokens(s)) == _normalize(_regex_tokens(s)), repr(s)
+        assert _normalize(_kernel_tokens(s)) == _normalize(_regex_tokens(s)), repr(s)
 
 
 def test_scanner_matches_regex_fuzz():
@@ -83,23 +76,62 @@ def test_scanner_matches_regex_fuzz():
     alphabet = "<>ab /=\"'\n"
     for _ in range(20000):
         s = "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 60)))
-        assert _normalize(_scanner_tokens(s)) == _normalize(_regex_tokens(s)), repr(s)
+        assert _normalize(_kernel_tokens(s)) == _normalize(_regex_tokens(s)), repr(s)
 
 
 def test_scanner_loop_is_the_shipped_one():
-    """Guard against the test and the kernel drifting apart: the token
-    boundaries implied by tokenize()'s Block output must be consistent
-    with _scanner_tokens on a page with every edge shape."""
-    from toyocr_spark.extractor.tokenizer import tokenize
-
-    src = "<p>a &amp; b</p><div>c < d</div><ul><li>x</li></ul><p>tail"
-    blocks = tokenize(src)
-    texts = [b.text for b in blocks]
+    """Every field of tokenize()'s blocks on a page with every edge
+    shape: the partition above, entities, anchors and inline tags,
+    layout classes, an absolute box, a void block tag, broken nesting
+    and an unclosed final block."""
+    src = (
+        "<h1>Title</h1>"
+        '<p>a &amp; <a href="u">b  c</a> <b>d</b></p>'
+        '<div style="position:absolute;left:1px;top:2px">c < d</div>'
+        "<ul><li>x</li></ul><br><td>cell</p>tail"
+    )
     # '< d</div>' is ONE tag token (name 'd', unknown -> dropped) under
     # the first-'>' rule, so the '<' swallows ' d</div>' and the div
-    # stays open — exactly what the reference regex did
-    assert texts == ["a & b", "c", "x", "tail"]
-    assert blocks[3].tag_path == ("div", "p")
+    # stays open — exactly what the reference regex did; '</p>' closes
+    # no open p and leaves the path as it is
+    assert _fields(tokenizer.tokenize(src)) == [
+        ("Title", ("h1",), 5, 0, 0, "title", None, 0),
+        ("a & b c d", ("p",), 9, 3, 2, "text", None, 1),
+        ("c", ("div",), 1, 0, 0, "text", (1, 2, 100, 20), 2),
+        ("x", ("div", "ul", "li"), 1, 0, 0, "list", None, 3),
+        ("cell", ("div", "td"), 4, 0, 0, "table", None, 4),
+        ("tail", ("div", "td"), 4, 0, 0, "table", None, 5),
+    ]
+
+
+def test_transition_memo_is_bounded_and_exact(monkeypatch):
+    """A page with more distinct tag paths than the node table holds,
+    more distinct tag tokens under one node than the tag cache or a
+    node's step memo holds, and more distinct transitions than the
+    step budget: the walk gives the same blocks with empty caches and
+    with full ones, and no cache outgrows its cap."""
+    cap = tokenizer._PATH_CACHE_CAP
+    names = sorted(tokenizer.BLOCK_TAGS - tokenizer._VOID_TAGS)[:26]
+    assert len(names) ** 3 > cap
+    page = (
+        "<p>"
+        + "".join(f'<span data-i="{i}">w</span>' for i in range(cap + 1))
+        + "</p>"
+        + "".join(f"<{a}><{b}><{c}>t</{c}></{b}></{a}>" for a in names for b in names for c in names)
+    )
+    for cache in ("_NODES", "_TAG_CACHE"):
+        monkeypatch.setattr(tokenizer, cache, {})
+    monkeypatch.setattr(tokenizer, "_n_steps", 0)
+    cold = _fields(tokenizer.tokenize(page))
+    assert len(tokenizer._NODES) == cap
+    warm = _fields(tokenizer.tokenize(page))
+    assert cold == warm
+    assert len(cold) == 1 + len(names) ** 3
+    assert len(tokenizer._NODES) <= cap
+    assert len(tokenizer._TAG_CACHE) <= cap
+    steps = [len(n.steps) for n in tokenizer._NODES.values()]
+    assert max(steps) == tokenizer._STEP_CAP
+    assert sum(steps) == tokenizer._n_steps == cap
 
 
 def test_position_box_case_insensitive():
@@ -136,6 +168,9 @@ def test_make_block_collapses_exactly_as_str_split():
     collapses to nothing is no block."""
     from toyocr_spark.extractor.tokenizer import make_block
 
+    # the fast path's premise: printable text holds no whitespace but ' '
+    spaces = [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
+    assert [c for c in spaces if c.isprintable()] == [" "]
     for raw, want in (
         ("", ""),
         ("\t\n\r \x85", ""),
@@ -152,6 +187,9 @@ def test_make_block_collapses_exactly_as_str_split():
             assert b is None, repr(raw)
         else:
             assert (b.text, b.n_chars) == (want, len(want)), repr(raw)
+    # already collapsed text comes back as it is
+    for text in ("a", "a b", "x\u200by z", "naïve — 中文 text"):
+        assert make_block(text, (), "text").text == text
 
 
 def test_make_block_clamps_link_chars_and_keeps_the_rest():

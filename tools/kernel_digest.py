@@ -6,8 +6,9 @@ show that a kernel change leaves every output as it was.
 
 Reads the ``html`` column of every parquet file under each
 ``<pages_dir>`` with pyarrow alone (no Spark), keeps each distinct body
-once, adds N seeded truncate / bit-flip / delete / insert mutants of
-them (``mutate``), and runs ``extract`` on every input in that order.
+once (ordered by content hash), adds N seeded truncate / bit-flip /
+delete / insert mutants of them (``mutate``), and runs ``extract`` on
+every input in that order.
 Prints one JSON line:
 
     {"inputs": ..., "raised": ..., "per_leg": {leg: inputs}, "digest": sha256}
@@ -57,7 +58,9 @@ def mutate(rng: random.Random, doc: bytes) -> bytes:
 
 
 def distinct_bodies(pages_dirs: list[str]) -> list[bytes]:
-    """Every distinct non-empty ``html`` body, in file and row order."""
+    """Every distinct non-empty ``html`` body, ordered by sha256: the
+    order, and so the mutants drawn from it, does not depend on how a
+    build of the table spread its rows over files."""
     import pyarrow.parquet as pq
 
     seen: set[bytes] = set()
@@ -74,7 +77,7 @@ def distinct_bodies(pages_dirs: list[str]) -> list[bytes]:
                     if body and body not in seen:
                         seen.add(body)
                         bodies.append(body)
-    return bodies
+    return sorted(bodies, key=lambda b: hashlib.sha256(b).digest())
 
 
 # every Block field a leg sets (a dataclass-internal field would make

@@ -12,6 +12,19 @@ count, the tag path at the block start, an optional absolute-position
 box (for the XY-cut layout pass), and a coarse layout class
 (``kind`` in {text,title,list,table,figure} — the reference's 5 layout
 classes, /root/reference/data/dataset/layout_analysis.py:10).
+
+The walk: ``_TAG_SPLIT_RE.split`` cuts the source into alternating text
+and tag runs in one C pass, and the open-block path moves over interned
+path nodes (``_Node``). Each node holds its path tuple and layout class
+and memoizes, per tag token, the step out of it (next node, what the
+tag does to the run, the box it opens), so a tag seen before under the
+same path costs one dict hit. The node table, each node's steps and
+all steps together are capped; past a cap the walk stays exact and
+stops memoizing.
+
+Blocks are built by ``make_block``, which owns the block contract. Most
+HTML block texts are already collapsed (one ' ' between words, none at
+the edges, no other whitespace), and for those it skips the collapse.
 """
 
 from __future__ import annotations
@@ -142,8 +155,13 @@ def make_block(
     """The Block of raw `text` under the block contract: the text
     collapsed, None when nothing is left, `n_chars` taken from the text
     and `link_chars` clamped to it."""
-    # == re.sub(r"\s+", " ", text).strip() for every codepoint, ~3x faster
-    text = " ".join(text.split())
+    # most block texts are already collapsed: printable text holds no
+    # whitespace but ' ' (every other str.isspace() code point is
+    # non-printable), so with no '  ' and no edge space the collapse is
+    # the identity and is skipped
+    if not (text.isprintable() and "  " not in text and text[:1] != " " and text[-1:] != " "):
+        # == re.sub(r"\s+", " ", text).strip() for every codepoint, ~3x faster
+        text = " ".join(text.split())
     if not text:
         return None
     n = len(text)
@@ -156,7 +174,6 @@ def make_block(
 # grow worker memory (same spill-control stance as MAX_HTML_BYTES).
 _PATH_CACHE_CAP = 1 << 14
 _BOILER_CACHE: dict[tuple[str, ...], bool] = {}
-_CLASSIFY_CACHE: dict[tuple[str, ...], str] = {}
 # tag-token -> (name, closing, box|None, cat) | None-for-malformed; 0 is
 # the miss sentinel (a valid entry is never 0). The box is parsed here,
 # at token-cache-fill time, so the "position" pre-check can afford a
@@ -263,15 +280,6 @@ def _decode(html: bytes | str) -> str:
     return html.decode("utf-8", "replace")
 
 
-def _classify(tag_path: tuple[str, ...]) -> str:
-    k = _CLASSIFY_CACHE.get(tag_path)
-    if k is None:
-        k = _classify_walk(tag_path)
-        if len(_CLASSIFY_CACHE) < _PATH_CACHE_CAP:
-            _CLASSIFY_CACHE[tag_path] = k
-    return k
-
-
 def _classify_walk(tag_path: tuple[str, ...]) -> str:
     # innermost classification wins: walk the path from the leaf
     for t in reversed(tag_path):
@@ -286,6 +294,84 @@ def _classify_walk(tag_path: tuple[str, ...]) -> str:
     return "text"
 
 
+class _Node:
+    """One open-block path of the tag walk, interned in `_NODES`: the
+    path tuple, its layout class, and `steps`, the memoized transitions
+    out of it (tag token -> `_step`'s (next node, category, box))."""
+
+    __slots__ = ("path", "kind", "steps", "interned")
+
+    def __init__(self, path: tuple[str, ...], interned: bool) -> None:
+        self.path = path
+        self.kind = _classify_walk(path)
+        self.steps: dict[str, tuple[_Node, int, tuple[int, int, int, int] | None]] = {}
+        self.interned = interned
+
+
+# path -> node, capped at _PATH_CACHE_CAP nodes. Steps are capped at
+# _STEP_CAP per node and at _PATH_CACHE_CAP over all nodes (`_n_steps`
+# counts them), so the memo keeps at most that many token strings alive
+# past _TAG_CACHE's. Past a cap the walk stays exact and just stops
+# memoizing: a node made past the table cap is never interned, and a
+# step is memoized only between interned nodes, so nothing uncached is
+# kept alive.
+_NODES: dict[tuple[str, ...], _Node] = {}
+_STEP_CAP = 256
+_n_steps = 0
+
+
+def _node(path: tuple[str, ...]) -> _Node:
+    node = _NODES.get(path)
+    if node is None:
+        interned = len(_NODES) < _PATH_CACHE_CAP
+        node = _Node(path, interned)
+        if interned:
+            _NODES[path] = node
+    return node
+
+
+# step categories: what one tag token does to the walk
+_IGNORE, _BLOCK, _OPEN_A, _CLOSE_A, _OPEN_INLINE = range(5)
+
+
+def _step(node: _Node, tok: str) -> tuple[_Node, int, tuple[int, int, int, int] | None]:
+    """The transition out of `node` on tag token `tok`, memoized on
+    `node`: (next node, category, box of the block the tag opens)."""
+    global _n_steps
+    hit = _TAG_CACHE.get(tok, 0)
+    if hit == 0:
+        hit = _parse_tag(tok)
+        if len(_TAG_CACHE) < _PATH_CACHE_CAP:
+            _TAG_CACHE[tok] = hit
+    nxt, cat, box = node, _IGNORE, None
+    if hit is not None:
+        name, closing, tag_box, tag_cat = hit
+        if tag_cat == 1:  # block: closes the run; opens or closes a path level
+            cat, box = _BLOCK, tag_box  # a closing tag has no box
+            path = node.path
+            if not closing:
+                nxt = _node(path + (name,))
+            elif name in path:
+                # pop to the innermost matching open tag (tolerant of
+                # broken nesting); an unmatched close keeps the path
+                i = len(path) - 1
+                while path[i] != name:
+                    i -= 1
+                nxt = _node(path[:i])
+        elif tag_cat == 4:  # void block (br/hr): closes the run, never stacks
+            cat = _BLOCK
+        elif tag_cat == 2:
+            cat = _CLOSE_A if closing else _OPEN_A
+        elif tag_cat == 3 and not closing:
+            cat = _OPEN_INLINE
+    step = (nxt, cat, box)
+    steps = node.steps
+    if node.interned and nxt.interned and len(steps) < _STEP_CAP and _n_steps < _PATH_CACHE_CAP:
+        steps[tok] = step
+        _n_steps += 1
+    return step
+
+
 def tokenize(html: bytes | str) -> list[Block]:
     """Parse HTML into a list of non-empty text blocks, in document order.
 
@@ -298,19 +384,15 @@ def tokenize(html: bytes | str) -> list[Block]:
     src = _STRIP_RE.sub(" ", src)
 
     blocks: list[Block] = []
-    stack: list[str] = []
-    path: tuple[str, ...] = ()  # always == tuple(stack); cached to avoid
-    #                             re-tupling on every flush (hot loop)
+    # a block is emitted under the node current when its run closes
+    node = _node(())
+    steps_get = node.steps.get
     link_depth = 0
     # open-block state lives in LOCALS (not attributes of a reusable
     # Block): local loads/stores are several times cheaper than slots
     # attribute access in this loop, and a Block object is allocated
-    # only when a block is actually emitted — the flush/reset semantics
-    # (incl. the path recorded at the last block-tag event and the
-    # box/counter resets) are identical to the previous closure form,
-    # gauntleted field-by-field over the corpus + fixtures + soup fuzz.
+    # only when a block is actually emitted.
     parts: list[str] = []
-    block_path: tuple[str, ...] = ()
     link_chars = 0
     n_inline = 0
     cur_box: tuple[int, int, int, int] | None = None
@@ -325,7 +407,6 @@ def tokenize(html: bytes | str) -> list[Block]:
     # element — handled by the '<'-split branch). Byte-equivalence with
     # the original char-walk is gauntleted over every fixture class + an
     # HTML-soup fuzz corpus.
-    tag_cache_get = _TAG_CACHE.get  # hoisted: one lookup per tag token
     parts_append = parts.append  # parts is cleared in place, never rebound
     blocks_append = blocks.append
     unescape = _htmlmod.unescape
@@ -346,57 +427,37 @@ def tokenize(html: bytes | str) -> list[Block]:
                     # parity: collapse here too so link_chars <= n_chars
                     link_chars += len(" ".join(piece.split()))
     for tok, text in zip(seg_iter, seg_iter):
-        # tag tokens repeat enormously in a crawl (</p>, <div>, ...);
-        # memoize the parse (incl. the category chain): None = malformed
-        hit = tag_cache_get(tok, 0)
-        if hit == 0:
-            hit = _parse_tag(tok)
-            if len(_TAG_CACHE) < _PATH_CACHE_CAP:
-                _TAG_CACHE[tok] = hit
-        if hit is not None:
-            name, closing, box, cat = hit
-            if cat == 1 or cat == 4:  # block / void-block: close the run
-                if parts:
-                    # most blocks hold exactly one run: skip the concat
-                    b = make_block(
-                        parts[0] if len(parts) == 1 else "".join(parts),
-                        block_path, _classify(block_path), link_chars, n_inline, cur_box,
-                    )
-                    if b is not None:
-                        blocks_append(b)
-                    parts.clear()
-                    link_chars = 0
-                    n_inline = 0
-                elif link_chars or n_inline:
-                    link_chars = 0
-                    n_inline = 0
-                cur_box = None
-                if cat == 1:
-                    if closing:
-                        # pop to the matching open tag if present
-                        # (tolerant of broken nesting — pathological
-                        # fixture pages)
-                        if name in stack:
-                            while stack:
-                                if stack.pop() == name:
-                                    break
-                            path = tuple(stack)
-                    else:
-                        stack.append(name)
-                        path = tuple(stack)
-                        if box is not None:
-                            cur_box = box
-                    block_path = path
-            elif cat == 2:  # anchor
-                if closing:
-                    link_depth = max(0, link_depth - 1)
-                else:
-                    link_depth += 1
-                    n_inline += 1
-            elif cat == 3:  # other inline
-                if not closing:
-                    n_inline += 1
-            # cat == 0: ignored entirely
+        step = steps_get(tok)
+        if step is None:
+            step = _step(node, tok)
+        nxt, cat, box = step
+        if cat == _BLOCK:  # close the run
+            if parts:
+                # most blocks hold exactly one run: skip the concat
+                b = make_block(
+                    parts[0] if len(parts) == 1 else "".join(parts),
+                    node.path, node.kind, link_chars, n_inline, cur_box,
+                )
+                if b is not None:
+                    blocks_append(b)
+                parts.clear()
+                link_chars = 0
+                n_inline = 0
+            elif link_chars or n_inline:
+                link_chars = 0
+                n_inline = 0
+            cur_box = box
+            if nxt is not node:
+                node = nxt
+                steps_get = node.steps.get
+        elif cat == _OPEN_A:
+            link_depth += 1
+            n_inline += 1
+        elif cat == _CLOSE_A:
+            if link_depth:
+                link_depth -= 1
+        elif cat == _OPEN_INLINE:
+            n_inline += 1
         if text:
             if "<" in text:  # only possible in the final element
                 for frag in text.split("<"):
@@ -411,7 +472,7 @@ def tokenize(html: bytes | str) -> list[Block]:
                 if link_depth > 0:
                     link_chars += len(" ".join(piece.split()))
     if parts:  # final flush
-        b = make_block("".join(parts), block_path, _classify(block_path), link_chars, n_inline, cur_box)
+        b = make_block("".join(parts), node.path, node.kind, link_chars, n_inline, cur_box)
         if b is not None:
             blocks_append(b)
 
